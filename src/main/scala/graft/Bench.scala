@@ -204,7 +204,10 @@ object Bench {
       .mkString("{", ",", "}")
     val rs = allNames.map { n => "\"" + n + "\":" + runs(n).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    // A failed key (the -1.0 sentinel) fails the total instead of
+    // shrinking it; `failed` names the keys.
+    val failed = results.collect { case (k, v) if v < 0 => k }
+    val total = if (failed.nonEmpty) -1.0 else results.map(_._2).sum
     // calibration sample 2: machine state at sweep end — a large spread
     // between the two flags contention ARRIVING mid-run.
     val calibAfter = calibrate()
@@ -227,6 +230,7 @@ object Bench {
     // `best` (best-of-3 per key) + `calib` — trails the line where the
     // kept tail preserves it. `best` duplicates `queries` so a cut landing
     // mid-`queries` still leaves `best` intact for bench_diff.
-    println(s"""{"metric":"total","runs":$rs,"calib_runs":$cruns,"queries_normalized":$qn,"queries":$qs,"best":$qs,"gate_build":$gateBuild,"calib":$calib,"value":$total,"unit":"sec","sf":"$sfDir"}""")
+    val failedJs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(s"""{"metric":"total","runs":$rs,"calib_runs":$cruns,"queries_normalized":$qn,"queries":$qs,"best":$qs,"gate_build":$gateBuild,"calib":$calib,"failed":$failedJs,"cpus":$cpus,"value":$total,"unit":"sec","sf":"$sfDir"}""")
   }
 }

@@ -59,6 +59,8 @@ object ProbeMetrics {
     caught.clear()
     val fn = SparkEntry.queries(key)
     def run(): Double = {
+      // the Bench fence: no relation cached by an earlier run is reused.
+      spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9

@@ -21,10 +21,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       // sort-based shuffle writer everywhere — see Bench for the rationale.
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.pushdown.inFilterThreshold", "256")

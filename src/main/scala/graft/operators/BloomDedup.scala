@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.functions.GraftFunctions
 
@@ -29,8 +30,11 @@ import graft.functions.GraftFunctions
   * ~fpp of new rows to over-dedup is usually fine) but it is a recall
   * tradeoff the caller opts into.
   *
-  * Scale contract: the filter bytes live in the PLAN (a literal, like
-  * Spark's own runtime bloom joins and the ANN centroid broadcast):
+  * Scale contract: [[probe]]/[[keepNew]] put the filter bytes in the
+  * PLAN (a literal, like Spark's own runtime bloom joins and the ANN
+  * centroid broadcast); a caller that already holds its rows on the
+  * driver probes and grows the filter there instead ([[keyHash]],
+  * [[readFilter]], [[putHashes]]) and ships no literal at all.
   * `maxBytes` refuses filters beyond a broadcastable bound (default
   * 128 MiB ≈ 700M items at 1%). Beyond that, shape (2)/(3) applies.
   * Spark's `BloomFilterAggregate` additionally caps items/bits via the
@@ -95,7 +99,7 @@ object BloomDedup {
       conf.set(bitsKey,
         math.max(conf.get(bitsKey, "67108864").toLong, bits).toString)
       val built = corpus
-        .select(xxhash64(col(keyCol).cast("string")).as("__h"))
+        .select(keyHash(col(keyCol)).as("__h"))
         .agg(expr(s"bloom_agg(__h, ${expectedItems}L, ${bits}L)").as("__bf"))
         .head().getAs[Array[Byte]](0)
       if (built != null) built
@@ -103,11 +107,9 @@ object BloomDedup {
         // bloom_agg over ZERO rows returns NULL. An EMPTY relation still
         // has a well-defined filter — the all-zero bit array at the SAME
         // (items, bits) shape, so it keeps the [[mergeFilters]] identity
-        // (merging it changes nothing, byte-identically) — which the
-        // growing gate hits whenever a whole batch is duplicates.
+        // (merging it changes nothing, byte-identically).
         val out = new java.io.ByteArrayOutputStream()
-        org.apache.spark.util.sketch.BloomFilter
-          .create(expectedItems, bits).writeTo(out)
+        BloomFilter.create(expectedItems, bits).writeTo(out)
         out.toByteArray
       }
     } finally {
@@ -132,14 +134,38 @@ object BloomDedup {
     * expectedItems — capacity-plan the ingest horizon at build time and
     * rotate a fresh corpus version when it fills. */
   def mergeFilters(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val fa = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(a))
-    val fb = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(b))
-    fa.mergeInPlace(fb)
+    val fa = readFilter(a)
+    fa.mergeInPlace(readFilter(b))
+    writeFilter(fa)
+  }
+
+  /** The 64-bit key hash every filter here is built and probed with:
+    * `xxhash64` of the key's string form. A caller that collects it next
+    * to its rows can probe and grow a filter on the driver
+    * ([[readFilter]]'s `mightContainLong`, [[putHashes]]) exactly as the
+    * plan-side [[probe]] and [[buildFilter]] would. */
+  def keyHash(key: Column): Column = xxhash64(key.cast("string"))
+
+  /** Deserialize a filter for driver-side probes (`mightContainLong` on
+    * [[keyHash]] values). */
+  def readFilter(filter: Array[Byte]): BloomFilter =
+    BloomFilter.readFrom(new java.io.ByteArrayInputStream(filter))
+
+  private def writeFilter(f: BloomFilter): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    fa.writeTo(out)
+    f.writeTo(out)
     out.toByteArray
+  }
+
+  /** Insert [[keyHash]] values into a copy of `filter` on the driver —
+    * the fold step of a self-growing exact gate without a filter build
+    * job. `bloom_agg` puts the same longs into the same filter shape, so
+    * the result is byte-identical to `mergeFilters(filter, buildFilter(rows))`
+    * under the filter's own sizing, and so to one build over the union. */
+  def putHashes(filter: Array[Byte], hashes: Iterator[Long]): Array[Byte] = {
+    val f = readFilter(filter)
+    hashes.foreach(f.putLong)
+    writeFilter(f)
   }
 
   /** Rows whose key MIGHT be in the corpus (all true members + ~fpp of
@@ -147,15 +173,13 @@ object BloomDedup {
     * scan-fused Filter: no join, no shuffle, no exchange (spec-pinned). */
   def probe(batch: DataFrame, keyCol: String, filter: Array[Byte]): DataFrame = {
     GraftFunctions.ensureRegistered(batch.sparkSession)
-    batch.filter(call_function("bloom_contains",
-      lit(filter), xxhash64(col(keyCol).cast("string"))))
+    batch.filter(call_function("bloom_contains", lit(filter), keyHash(col(keyCol))))
   }
 
   /** Rows whose key is DEFINITELY not in the corpus — the keep-side gate
     * (over-dedups by ~fpp; see the class doc for the tradeoff). */
   def keepNew(batch: DataFrame, keyCol: String, filter: Array[Byte]): DataFrame = {
     GraftFunctions.ensureRegistered(batch.sparkSession)
-    batch.filter(!call_function("bloom_contains",
-      lit(filter), xxhash64(col(keyCol).cast("string"))))
+    batch.filter(!call_function("bloom_contains", lit(filter), keyHash(col(keyCol))))
   }
 }

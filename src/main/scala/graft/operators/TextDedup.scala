@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables.stage
@@ -83,19 +83,29 @@ object TextDedup {
   /** The UNSTAGED band-key projection behind [[minhashBandKeys]] — same
     * single-consumer/small-relation contract as [[shingleProjection]]
     * (a streaming micro-batch's band keys feed one join and are gone). */
-  def bandKeyProjection(shingled: DataFrame, k: Int, bands: Int): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
+  def bandKeyProjection(shingled: DataFrame, k: Int, bands: Int): DataFrame =
+    withMinhashSig(shingled, k).select(col("id"), explode(bandKeys(k, bands)).as("band_key"))
+
+  /** `shingled` plus `sig = minhash_sig(sh, k)`, the signature
+    * [[bandKeyProjection]] bands. */
+  def withMinhashSig(shingled: DataFrame, k: Int): DataFrame = {
     // library contract: register our native functions on whatever session
     // the caller hands us — minhash_sig is a graft extension.
     graft.functions.GraftFunctions.ensureRegistered(shingled.sparkSession)
+    shingled.withColumn("sig", expr(s"minhash_sig(sh, $k)"))
+  }
+
+  /** The `bands` md5 band keys of the input's `sig` column, as an array in
+    * band order. Apply it where `sig` is a column of the input: a plain
+    * projection over [[withMinhashSig]] would be collapsed into it and
+    * recompute the signature for every band row (the explode in
+    * [[bandKeyProjection]] keeps one signature per document). */
+  def bandKeys(k: Int, bands: Int): Column = {
+    require(k % bands == 0, s"k=$k must divide into bands=$bands")
     val rows = k / bands
-    val sig = shingled.withColumn("sig", expr(s"minhash_sig(sh, $k)"))
     val bandCols = (1 to rows).map(r => s"element_at(sig, $rows*b+$r)").mkString(", ")
-    sig.select(col("id"),
-      explode(expr(
-        s"""transform(sequence(0, ${bands - 1}),
-           |  b -> md5(concat(CAST(b AS STRING), '|', $bandCols)))""".stripMargin))
-        .as("band_key"))
+    expr(s"""transform(sequence(0, ${bands - 1}),
+            |  b -> md5(concat(CAST(b AS STRING), '|', $bandCols)))""".stripMargin)
   }
 
   /** MinHash + banded-LSH near-duplicate pairs: `k` min-hashes in `bands`
@@ -256,8 +266,19 @@ object TextDedup {
                                   refBandKeys: DataFrame,
                                   k: Int = 12, bands: Int = 4,
                                   threshold: Double = 0.5,
-                                  bandCap: Option[Int] = None): DataFrame = {
-    val nb = bandKeyProjection(newShingled, k, bands)
+                                  bandCap: Option[Int] = None): DataFrame =
+    minhashLshPairsAgainstIndex(newShingled, bandKeyProjection(newShingled, k, bands),
+      refShingled, refBandKeys, threshold, bandCap)
+
+  /** [[minhashLshPairsAgainstIndex]] with the new side's (id, band_key)
+    * relation PRECOMPUTED by the caller (a [[bandKeyProjection]] under
+    * the index's k/bands) — for callers that already hold the batch's
+    * projections, e.g. as driver-local relations. Same plan from the
+    * band-key join on. */
+  def minhashLshPairsAgainstIndex(newShingled: DataFrame, newBandKeys: DataFrame,
+                                  refShingled: DataFrame, refBandKeys: DataFrame,
+                                  threshold: Double,
+                                  bandCap: Option[Int]): DataFrame = {
     val index = bandCap match {
       case Some(cap) =>
         import org.apache.spark.sql.expressions.Window
@@ -268,7 +289,7 @@ object TextDedup {
       case None => refBandKeys
     }
     val cand = index.as("b")
-      .join(broadcast(nb.as("a")), col("a.band_key") === col("b.band_key"))
+      .join(broadcast(newBandKeys.as("a")), col("a.band_key") === col("b.band_key"))
       .select(col("a.id").as("da"), col("b.id").as("db"))
       .distinct()
     // the candidate side stays hinted through BOTH verify joins — without

@@ -28,10 +28,10 @@ import graft.operators.Ranking
   * versa); the fold's replay fence ([[Gate.Folded]]) governs the whole
   * body — a checkpoint-replayed batch is neither re-folded nor
   * re-emitted. Per-batch cost is the sum of the parts, all batch-sized:
-  * a map-side feature projection + broadcast weights join, the scan-fused
-  * bloom filter, the broadcast settle + LSH probe, and batch-sized
-  * appends (measured per piece in README §streaming gate / §incremental
-  * upkeep).
+  * a map-side feature projection + broadcast weights join, then the
+  * dedup fold over the kept rows (one collect, a driver-side bloom
+  * probe, the settle + LSH probe, and batch-sized appends; see
+  * [[DedupIngest.foldBatch]]).
   */
 object CurateIngest {
 

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -67,8 +69,9 @@ object DedupIngest {
 
   /** One corpus version's FULL dedup state for the combined gate: the LSH
     * near-dup index, the staged (db, __digest) exact-content relation, and
-    * the bloom filter over those digests (a plan literal — zero per-batch
-    * corpus work for the exact gate). `version` tags emitted batches so a
+    * the bloom filter over those digests (probed on the driver against
+    * each collected batch — zero per-batch corpus work for the exact
+    * gate's pre-filter). `version` tags emitted batches so a
     * sink can attribute pairs to the corpus they were deduped against. */
   final case class CorpusState(index: CorpusIndex, digests: DataFrame,
                                exactFilter: Array[Byte], version: Long)
@@ -93,18 +96,17 @@ object DedupIngest {
 
   /** The COMPOSED per-batch production gate: exact dedup first (bloom
     * pre-gate + exact settle), then near-dup LSH on the survivors only.
-    * Per micro-batch:
+    * Per micro-batch (see [[gateBatch]] for the collect-once shape):
     *
-    *   1. the bloom filter — a scan-fused literal Filter, no join, no
-    *      corpus access — passes only rows whose md5 content digest MIGHT
-    *      be in the corpus (all true exact dups + ~fpp false positives);
-    *   2. those few candidates broadcast onto the staged corpus digest
-    *      relation to settle EXACTLY → `exactPairs` (da = batch id,
-    *      db = corpus id with identical content; no false drops — a bloom
-    *      false positive simply fails the settle join). The settle join
-    *      runs ONCE per micro-batch: its (tiny) result is materialized
-    *      and feeds both the sink and the survivor anti-join as a local
-    *      relation (see [[gateBatch]]);
+    *   1. the bloom filter, probed on the driver against the collected
+    *      rows' digest hashes — no join, no corpus access — passes only
+    *      rows whose md5 content digest MIGHT be in the corpus (all true
+    *      exact dups + ~fpp false positives);
+    *   2. those few candidates settle EXACTLY against the staged corpus
+    *      digest relation → `exactPairs` (da = batch id, db = corpus id
+    *      with identical content; no false drops — a bloom false positive
+    *      simply finds no digest). The settle runs ONCE per micro-batch
+    *      and its (tiny) result is a local relation;
     *   3. rows with an exact match skip shingling entirely (their LSH
     *      pairs are foregone conclusions); the SURVIVORS run
     *      [[TextDedup.minhashLshPairsAgainstIndex]] against the persisted
@@ -127,18 +129,23 @@ object DedupIngest {
     }
 
   /** SELF-GROWING gate state: a [[CorpusState]] plus the staged directory
-    * paths fold appends go to and the bloom sizing every fold must reuse
-    * ([[graft.operators.BloomDedup.mergeFilters]] needs identical
-    * shapes). Requires parquet staging mode (`graft.stage.dir`) — the
-    * whole point of the fold is batch-sized APPENDS to persisted index
-    * directories; localCheckpoint mode would rewrite the corpus per
-    * batch. `expectedItems` is the bloom CAPACITY for the ingest horizon
-    * (fpp degrades past it — rotate a fresh version when filled). */
+    * paths fold appends go to and the bloom sizing it was built under
+    * (folds insert into the same filter shape, so a grown filter equals
+    * one build over the union). Requires parquet staging mode
+    * (`graft.stage.dir`) — the whole point of the fold is batch-sized
+    * APPENDS to persisted index directories; localCheckpoint mode would
+    * rewrite the corpus per batch. `expectedItems` is the bloom CAPACITY
+    * for the ingest horizon (fpp degrades past it — rotate a fresh
+    * version when filled). `tombstones` are the retired ids, held on the
+    * driver (read from `tombstonesPath` at restore, extended by
+    * [[retire]]) so re-opening the views reads no tombstone relation;
+    * by contract they are few (takedowns, not deletes at corpus scale). */
   final case class GrowingState(cs: CorpusState,
                                 shingledPath: String, bandPath: String,
                                 digestsPath: String, tombstonesPath: String,
                                 expectedItems: Long, fpp: Double,
-                                foldedBatch: Long = -1L) extends Gate.Folded {
+                                foldedBatch: Long = -1L,
+                                tombstones: Set[Long] = Set.empty) extends Gate.Folded {
     def version: Long = cs.version
   }
 
@@ -152,8 +159,11 @@ object DedupIngest {
                         fpp: Double = 0.01, capacityItems: Long = 1000000L,
                         version: Long = 0L): GrowingState = {
     val spark = corpus.sparkSession
-    val sh = graft.sources.Tables.stageTracked(
-      TextDedup.shingleProjection(corpus, idCol, textCol, n))
+    // ids are longs in every relation of the state: folds append the
+    // driver-collected batch under the same schema.
+    val sh = graft.sources.Tables.stageTracked(TextDedup.shingleProjection(
+      corpus.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
+      "id", "text", n))
     val bk = graft.sources.Tables.stageTracked(
       TextDedup.bandKeyProjection(sh.df, k, bands))
     val dg = graft.sources.Tables.stageTracked(corpus.select(
@@ -177,9 +187,10 @@ object DedupIngest {
     * what the operator persists (alongside the stream checkpoint); the
     * in-memory state reference is rebuilt from them, the replay fence
     * then skips checkpoint-replayed batches at or below `foldedBatch`,
-    * and the stream resumes exactly where it stopped. The bloom filter
-    * rebuilds from the LIVE digests (one scan of 16-byte rows — retired
-    * content's stale bits drop out as a bonus).
+    * and the stream resumes exactly where it stopped. The tombstone ids
+    * are read back onto the driver once; the bloom filter rebuilds from
+    * the LIVE digests (one scan of 16-byte rows — retired content's stale
+    * bits drop out as a bonus).
     *
     * CRASH REPAIR: subdirs a mid-fold crash appended ABOVE `foldedBatch`
     * are DELETED first ([[Gate.pruneGrown]]) — otherwise the replayed
@@ -195,38 +206,47 @@ object DedupIngest {
                           version: Long = 0L, foldedBatch: Long = -1L): GrowingState = {
     Seq(shingledPath, bandPath, digestsPath)
       .foreach(Gate.pruneGrown(spark, _, foldedBatch))
+    val tombstones = Gate.readGrown(spark, tombstonesPath)
+      .select(col("id").cast("long")).collect()
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }.toSet
     val skeleton = GrowingState(
       CorpusState(CorpusIndex(null, null, n, k, bands), null,
         Array.emptyByteArray, version),
       shingledPath, bandPath, digestsPath, tombstonesPath,
-      capacityItems, fpp, foldedBatch)
-    val liveDigests = Gate.readGrown(spark, digestsPath)
-      .join(broadcast(Gate.readGrown(spark, tombstonesPath)
-        .select(col("id").as("db"))), Seq("db"), "left_anti")
+      capacityItems, fpp, foldedBatch, tombstones)
+    val liveDigests = unretired(Gate.readGrown(spark, digestsPath), "db", tombstones)
     val filter = BloomDedup.buildFilter(liveDigests, "__digest",
       capacityItems, fpp)
     skeleton.copy(cs = liveCorpusState(spark, skeleton, filter, version))
   }
 
   /** Re-open a growing state's index relations: the grown directories
-    * with the tombstone anti-filter applied (retired ids drop out of
-    * every probe-visible relation; the tombstone relation itself is
-    * by-contract tiny and broadcasts). */
+    * with the driver-held tombstones filtered out (retired ids drop out of
+    * every probe-visible relation). Starts no job: each directory is read
+    * under the schema the state's previous view already carries (only
+    * the restore skeleton, which has no views yet, infers), and the
+    * tombstone filter is a literal id set — absent when nothing is
+    * retired. */
   private def liveCorpusState(spark: org.apache.spark.sql.SparkSession,
                               st: GrowingState, filter: Array[Byte],
                               version: Long): CorpusState = {
-    val tombs = Gate.readGrown(spark, st.tombstonesPath)
+    def live(root: String, prev: DataFrame, idCol: String) =
+      unretired(Gate.readGrown(spark, root, Option(prev).map(_.schema)),
+        idCol, st.tombstones)
     CorpusState(
       CorpusIndex(
-        Gate.readGrown(spark, st.shingledPath)
-          .join(broadcast(tombs), Seq("id"), "left_anti"),
-        Gate.readGrown(spark, st.bandPath)
-          .join(broadcast(tombs), Seq("id"), "left_anti"),
+        live(st.shingledPath, st.cs.index.shingled, "id"),
+        live(st.bandPath, st.cs.index.bandKeys, "id"),
         st.cs.index.n, st.cs.index.k, st.cs.index.bands),
-      Gate.readGrown(spark, st.digestsPath)
-        .join(broadcast(tombs.select(col("id").as("db"))), Seq("db"), "left_anti"),
+      live(st.digestsPath, st.cs.digests, "db"),
       filter, version)
   }
+
+  /** `df` without the rows of retired ids — the left-anti semantics of a
+    * tombstone join (a null id is never retired) as a literal filter. */
+  private def unretired(df: DataFrame, idCol: String, tombstones: Set[Long]): DataFrame =
+    if (tombstones.isEmpty) df
+    else df.filter(col(idCol).isNull || !col(idCol).isInCollection(tombstones))
 
   /** RETIRE documents (takedowns — the delete half of the ingest
     * lifecycle): append their ids to the tombstone relation and return a
@@ -243,9 +263,13 @@ object DedupIngest {
     * batch). Swap the result into the state reference between batches. */
   def retire(st: GrowingState, ids: DataFrame, tag: Long): GrowingState = {
     val spark = ids.sparkSession
-    Gate.growDir(ids.select(col(ids.columns.head).cast("long").as("id")),
+    val retiredDf = ids.select(col(ids.columns.head).cast("long").as("id"))
+    val retired = retiredDf.collect()
+    Gate.growDir(spark.createDataFrame(retired.toSeq.asJava, retiredDf.schema).coalesce(1),
       st.tombstonesPath, tag)
-    st.copy(cs = liveCorpusState(spark, st, st.cs.exactFilter, st.cs.version + 1))
+    val next = st.copy(tombstones = st.tombstones ++
+      retired.collect { case r if !r.isNullAt(0) => r.getLong(0) })
+    next.copy(cs = liveCorpusState(spark, next, st.cs.exactFilter, st.cs.version + 1))
   }
 
   /** The SELF-GROWING production ingest loop — [[startGated]] plus the
@@ -254,16 +278,18 @@ object DedupIngest {
     * duplicates are distinct content and do join) BECOME corpus. Per
     * batch, beyond [[gateBatch]]:
     *
-    *   1. the novel rows' shingle / band-key / digest projections APPEND
-    *      to the staged index directories (batch-sized writes — zero
-    *      corpus work; the in-flight batch's own probe plans hold the
+    *   1. the novel rows' shingle / band-key / digest projections — the
+    *      driver-local relations the gate already built — APPEND to the
+    *      staged index directories, one file per directory, the three
+    *      writes running concurrently (batch-sized writes — zero corpus
+    *      work; the in-flight batch's own probe plans hold the
     *      pre-append file snapshot, so results stay consistent);
-    *   2. a batch bloom filter built under the state's FIXED sizing
-    *      merges into the corpus filter
-    *      ([[BloomDedup.mergeFilters]] — byte-identical to one build
-    *      over the union);
-    *   3. the state advances to fresh reads of the grown directories, so
-    *      the NEXT batch dedups against everything ingested so far.
+    *   2. the novel rows' digest hashes are inserted into the corpus
+    *      filter on the driver ([[BloomDedup.putHashes]] — byte-identical
+    *      to one build over the union);
+    *   3. the state advances to fresh reads of the grown directories
+    *      (no job: known schemas, driver-held tombstones), so the NEXT
+    *      batch dedups against everything ingested so far.
     *
     * Equivalence (StreamingDedupSpec): after any number of folds, the
     * grown state's filter and probe results are bitwise what
@@ -375,73 +401,103 @@ object DedupIngest {
   /** One micro-batch through the gate-then-grow step (see
     * [[startGatedGrowing]]) — exposed so composed loops
     * ([[CurateIngest]]) and specs can run the exact fold the stream
-    * runs. Returns ((exactPairs, nearPairs), the advanced state).
+    * runs. Returns ((exactPairs, nearPairs), the advanced state). Jobs
+    * per batch: the one read of the batch, the settle (only when the
+    * bloom passes a candidate) and the three appends; the bloom fold and
+    * the state re-open run on the driver. The sink's collect of
+    * `nearPairs` runs the LSH probe.
     *
     * FOLD ATOMICITY: each batch's appends land in per-batch
     * subdirectories written with OVERWRITE ([[Gate.growDir]]) — a crash
     * mid-fold followed by a checkpoint replay (the state reference never
     * advanced, so the replay fence does NOT skip it) simply overwrites
     * the partial attempt instead of duplicating index rows; the bloom
-    * merge recomputes from the unchanged pre-fold base. The same layout
+    * fold recomputes from the unchanged pre-fold base. The same layout
     * maps directly onto a transactional table format's appends at
     * cluster scale (batchId as the idempotence key). */
   def foldBatch(batch: DataFrame, st: GrowingState,
                 idCol: String, textCol: String,
                 threshold: Double, bandCap: Option[Int],
                 batchId: Long): ((DataFrame, DataFrame), GrowingState) = {
-    val spark = batch.sparkSession
-    val (exactPairs, nearPairs) =
-      gateBatch(batch, st.cs, idCol, textCol, threshold, bandCap)
-    // exactPairs is a driver-local relation (gateBatch settles once).
-    val dupIds = exactPairs.select(col("da")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val novel =
-      if (dupIds.isEmpty) batch
-      else batch.filter(!col(idCol).cast("long").isInCollection(dupIds))
-    val novSh = TextDedup.shingleProjection(novel, idCol, textCol, st.cs.index.n)
-    Gate.growDir(novSh, st.shingledPath, batchId)
-    Gate.growDir(
-      TextDedup.bandKeyProjection(novSh, st.cs.index.k, st.cs.index.bands),
-      st.bandPath, batchId)
-    val novDg = novel.select(col(idCol).cast("long").as("db"),
-      md5(col(textCol)).as("__digest"))
-    Gate.growDir(novDg, st.digestsPath, batchId)
-    val merged = BloomDedup.mergeFilters(st.cs.exactFilter,
-      BloomDedup.buildFilter(novDg, "__digest", st.expectedItems, st.fpp))
-    val nextCs = liveCorpusState(spark, st, merged, st.cs.version + 1)
-    ((exactPairs, nearPairs), st.copy(cs = nextCs, foldedBatch = batchId))
+    val g = gate(batch, st.cs, idCol, textCol, threshold, bandCap)
+    val novDg = g.survivors.select(col("id").as("db"), col("__digest"))
+    graft.sources.Tables.inParallel(Seq(
+      g.shingled -> st.shingledPath, g.bandKeys -> st.bandPath, novDg -> st.digestsPath)
+      .map { case (df, root) => () => Gate.growDir(df.coalesce(1), root, batchId) })
+    val grown = BloomDedup.putHashes(st.cs.exactFilter, g.survivorHashes.iterator)
+    val nextCs = liveCorpusState(batch.sparkSession, st, grown, st.cs.version + 1)
+    ((g.exactPairs, g.nearPairs), st.copy(cs = nextCs, foldedBatch = batchId))
   }
 
   /** One micro-batch through the gate (see [[startGated]]) — exposed so
     * specs and the bench harness drive the exact per-batch plan the
-    * stream runs. Single-pass settle: the exact-pair set is bounded by
-    * |batch| × content-duplicate multiplicity (tiny by contract — the
-    * corpus digest relation is near-unique), so the settle join is
-    * materialized ONCE to the driver and re-enters BOTH consumers (the
-    * caller's sink and the survivor anti-join) as a local relation —
-    * previously the lazy `exactPairs` subplan re-ran the settle join in
-    * each consumer, i.e. twice per micro-batch. */
+    * stream runs.
+    *
+    * COLLECT-ONCE: one job reads the micro-batch and brings (id, text,
+    * md5 digest, [[BloomDedup.keyHash]] of the digest) to the driver;
+    * everything after works from that copy. The bloom probe runs on the
+    * driver, the candidates settle against the corpus digests in one
+    * filtered scan (none when no row passes the bloom), and the settled
+    * pairs come back as a LOCAL relation, so the caller's sink and the
+    * survivor split never re-run the settle. The survivors' shingle and
+    * band-key projections are built once from a local relation and enter
+    * the LSH probe (and a fold's appends) as local relations.
+    *
+    * DRIVER MEMORY: the micro-batch's ids and text, and the survivors'
+    * shingles and band keys, are held on the driver — the same bound the
+    * broadcast-probe shape already put on a batch (its band keys and
+    * shingles were collected for the broadcasts). Size micro-batches to
+    * the driver, as for any broadcast side. */
   def gateBatch(batch: DataFrame, st: CorpusState, idCol: String, textCol: String,
                 threshold: Double = 0.5, bandCap: Option[Int] = None)
       : (DataFrame, DataFrame) = {
+    val g = gate(batch, st, idCol, textCol, threshold, bandCap)
+    (g.exactPairs, g.nearPairs)
+  }
+
+  /** A gated micro-batch: the pair relations plus what a fold appends —
+    * the survivors (id, text, __digest, __hash), their digest hashes and
+    * their shingle and band-key relations, all driver-local. */
+  private final case class Gated(exactPairs: DataFrame, nearPairs: DataFrame,
+                                 survivors: DataFrame, survivorHashes: Seq[Long],
+                                 shingled: DataFrame, bandKeys: DataFrame)
+
+  private def gate(batch: DataFrame, st: CorpusState, idCol: String, textCol: String,
+                   threshold: Double, bandCap: Option[Int]): Gated = {
     val spark = batch.sparkSession
-    val withDigest = batch.withColumn("__digest", md5(col(textCol)))
-    val cand = BloomDedup.probe(withDigest, "__digest", st.exactFilter)
-    val pairRows = broadcast(
-        cand.select(col(idCol).cast("long").as("da"), col("__digest")))
-      .join(st.digests, "__digest")
-      .select(col("da"), col("db"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val digest = md5(col(textCol))
+    val read = batch.select(col(idCol).cast("long").as("id"), col(textCol).as("text"),
+      digest.as("__digest"), BloomDedup.keyHash(digest).as("__hash"))
+    val rows = read.collect().toSeq
+    val filter = BloomDedup.readFilter(st.exactFilter)
+    val cand = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(2) &&
+      filter.mightContainLong(r.getLong(3)))
+    val corpusIds: Map[String, Seq[Long]] =
+      if (cand.isEmpty) Map.empty
+      else st.digests
+        .filter(col("__digest").isInCollection(cand.map(_.getString(2)).distinct))
+        .select(col("db"), col("__digest")).collect().toSeq
+        .groupMap(_.getString(1))(_.getLong(0))
+    val pairRows = cand.flatMap(r =>
+      corpusIds.getOrElse(r.getString(2), Nil).map(db => (r.getLong(0), db)))
     val exactPairs = spark.createDataset(pairRows)(
       org.apache.spark.sql.Encoders.product[(Long, Long)]).toDF("da", "db")
-    val exactIds = spark.createDataset(pairRows.map(_._1).distinct)(
-      org.apache.spark.sql.Encoders.scalaLong).toDF("da")
-    val survivors = withDigest.join(broadcast(exactIds),
-      col(idCol).cast("long") === col("da"), "left_anti")
-    val nearPairs = TextDedup.minhashLshPairsAgainstIndex(
-      TextDedup.shingleProjection(survivors, idCol, textCol, st.index.n),
-      st.index.shingled, st.index.bandKeys,
-      st.index.k, st.index.bands, threshold, bandCap)
-    (exactPairs, nearPairs)
+    val exactIds = pairRows.map(_._1).toSet
+    val survivorRows = rows.filter(r => r.isNullAt(0) || !exactIds(r.getLong(0)))
+    val survivors = spark.createDataFrame(survivorRows.asJava, read.schema)
+    // shingles, signatures and band keys of the survivors, each computed
+    // once (a projection of a local relation evaluates on the driver) and
+    // held as local relations for the probe and the appends.
+    def local(df: DataFrame) = spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    val signed = local(TextDedup.withMinhashSig(
+      TextDedup.shingleProjection(survivors, "id", "text", st.index.n), st.index.k))
+    val banded = local(signed.select(col("id"), col("sh"),
+      TextDedup.bandKeys(st.index.k, st.index.bands).as("band_keys")))
+    val shingled = banded.select(col("id"), col("sh"))
+    val bandKeys = banded.select(col("id"), explode(col("band_keys")).as("band_key"))
+    val nearPairs = TextDedup.minhashLshPairsAgainstIndex(shingled, bandKeys,
+      st.index.shingled, st.index.bandKeys, threshold, bandCap)
+    Gated(exactPairs, nearPairs, survivors, survivorRows.map(_.getLong(3)),
+      shingled, bandKeys)
   }
 }

@@ -21,7 +21,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    projection, BROADCAST onto the index join — the corpus never
   *    shuffles and no per-batch staging dir is ever written (a staged
   *    batch side would write one parquet dir per micro-batch for zero
-  *    reuse);
+  *    reuse). The text gates ([[DedupIngest.gateBatch]], shared by the
+  *    bloom+LSH gate and its growing form) go one step further: they
+  *    COLLECT the micro-batch to the driver once (ids, text, digests,
+  *    hashes) and re-enter every later step as driver-local relations, so
+  *    the batch is read once and its probes and appends never re-scan it.
+  *    The driver-memory contract is the broadcast's: a micro-batch must
+  *    fit on the driver, as the broadcast side already had to;
   *  - corpus versions ROTATE atomically between batches via an
   *    [[AtomicReference]]: build the next version OUTSIDE the stream, then
   *    `state.set(next)` — foreachBatch bodies run sequentially and
@@ -210,9 +216,16 @@ object Gate {
     * lists, and the next fold's [[growDir]] bootstraps the log. The
     * recursiveFileLookup option serves both paths: with the log it
     * widens allFiles past the unpartitioned root-parent restriction;
-    * without it, it IS the listing. */
-  def readGrown(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(root)
+    * without it, it IS the listing.
+    *
+    * `schema`: the relation's schema when the caller already holds it
+    * (a re-open of a state it read before). Parquet schema inference runs
+    * a Spark job per read; with the schema given, the re-open plans from
+    * the log or listing alone and starts no job. */
+  def readGrown(spark: org.apache.spark.sql.SparkSession, root: String,
+                schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_))
+      .option("recursiveFileLookup", "true").parquet(root)
 
   /** The fold lineage of a grown directory: the distinct fold ids the
     * manifest records, ascending — the valid arguments to

@@ -298,6 +298,15 @@ class StreamingDedupSpec extends SparkSpec {
       }
       assert(pairsOf(grown) == pairsOf(freshState),
         "grown-state probe must equal fresh-union-state probe")
+      // each fold appends ONE parquet file per grown directory.
+      for (root <- Seq(grown.shingledPath, grown.bandPath, grown.digestsPath)) {
+        val folds = new java.io.File(root).listFiles().filter(_.getName.startsWith("batch_"))
+        assert(folds.length == 2, s"$root: folds ${folds.map(_.getName).toSeq}")
+        folds.foreach { d =>
+          val files = d.listFiles().count(_.getName.endsWith(".parquet"))
+          assert(files == 1, s"$d holds $files parquet files, want 1")
+        }
+      }
 
       // COMPACTION: consolidating the per-batch subdirectories must
       // change files only, never rows or probe results.
@@ -614,6 +623,129 @@ class StreamingDedupSpec extends SparkSpec {
         s"streamed spans diverge from batch: got=${got.toSet}\n want=$expected")
       assert(stageDirs == afterBuild,
         s"micro-batches staged new dirs: $afterBuild → $stageDirs — batch side must stay unstaged")
+    } finally spark.conf.unset("graft.stage.dir")
+  }
+
+  /** Spark jobs started while `body` runs: a listener counts job starts
+    * between two sentinel jobs (the listener bus delivers in order, so
+    * every job `body` started, on any thread, lands between them). */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tag = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val open = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.job.description")) match {
+          case Some(d) if d == s"$tag-open" => open.set(true)
+          case Some(d) if d == s"$tag-close" => open.set(false); closed.countDown()
+          case _ => if (open.get()) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    def sentinel(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel(s"$tag-open")
+      val out = body
+      sentinel(s"$tag-close")
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("growing gate: one micro-batch starts a pinned number of Spark jobs") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-stage").toString
+    spark.conf.set("graft.stage.dir", dir)
+    try {
+      val docs = Tables.documents(spark, sf("sf0.001"))
+        .select(col("doc_id"), col("text"))
+      val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+      val held = docs.filter(col("doc_id") % 10 === 0).orderBy(col("doc_id"))
+        .select(col("doc_id")).as[Long].collect()
+      val copies = corpus.orderBy(col("doc_id")).limit(10).select(col("doc_id")).as[Long].collect()
+      var st = DedupIngest.buildGrowingState(corpus, "doc_id", "text",
+        capacityItems = 10000L)
+      // a batch like the stream's, read from a source scan: exact copies,
+      // perturbed copies and novel docs.
+      def batch(b: Int) = {
+        val c = docs.filter(col("doc_id").isin(copies.slice(5 * b, 5 * b + 5): _*))
+        c.select((col("doc_id") + 1000000L * (b + 1)).as("doc_id"), col("text"))
+          .union(c.select((col("doc_id") + 2000000L * (b + 1)).as("doc_id"),
+            concat(col("text"), lit(" perturbed")).as("text")))
+          .union(docs.filter(col("doc_id").isin(held.slice(10 * b, 10 * b + 10): _*)))
+      }
+      def fold(b: Int) = {
+        val ((e, n), next) = DedupIngest.foldBatch(batch(b), st, "doc_id", "text",
+          0.5, None, b.toLong)
+        st = next
+        (e.as[(Long, Long)].collect().toSet, n.select(col("da"), col("db")).as[(Long, Long)].collect().toSet)
+      }
+      fold(0) // the first fold also bootstraps the manifests
+      val ((exact, near), jobs) = jobsDuring(fold(1))
+      assert(exact.size == 5 && near.nonEmpty, s"fixture: exact=$exact near=$near")
+      // foldBatch: 1 batch read + 1 settle + 3 appends (the projections,
+      // bloom fold and state re-open start none); the sink's collects: 5
+      // for the LSH probe over the local batch relations.
+      assert(jobs == 10, s"one growing-gate micro-batch started $jobs Spark jobs")
+    } finally spark.conf.unset("graft.stage.dir")
+  }
+
+  test("retire: driver-held tombstones survive a restart; later folds never pair them") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-stage").toString
+    spark.conf.set("graft.stage.dir", dir)
+    try {
+      val docs = Tables.documents(spark, sf("sf0.001"))
+        .select(col("doc_id"), col("text"))
+      val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+      val held = docs.filter(col("doc_id") % 10 === 0).orderBy(col("doc_id"))
+        .limit(10).collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      val targets = corpus.orderBy(col("doc_id")).limit(3).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+      var live = DedupIngest.buildGrowingState(corpus, "doc_id", "text",
+        capacityItems = 10000L)
+      live = DedupIngest.foldBatch(held.toDF("doc_id", "text"), live, "doc_id", "text",
+        0.5, None, 0L)._2
+      // retire a corpus doc and a folded doc, in two retire calls.
+      val retired = Set(targets.head._1, held.head._1)
+      live = DedupIngest.retire(live, Seq(targets.head._1).toDF("id"), tag = 1L)
+      live = DedupIngest.retire(live, Seq(held.head._1).toDF("id"), tag = 2L)
+      assert(live.tombstones == retired)
+
+      val restored = DedupIngest.restoreGrowingState(spark,
+        live.shingledPath, live.bandPath, live.digestsPath, live.tombstonesPath,
+        capacityItems = 10000L, foldedBatch = live.foldedBatch)
+      assert(restored.tombstones == retired, s"restored tombstones: ${restored.tombstones}")
+
+      // exact and perturbed copies of the retired and of live docs.
+      val next = (Seq(targets.head, held.head, targets(1), held(1)).zipWithIndex
+        .flatMap { case ((_, t), i) =>
+          Seq((800000L + i, t), (810000L + i, t + " perturbed")) } :+
+        ((820000L, targets(2)._2))).toDF("doc_id", "text")
+      def pairs(e: org.apache.spark.sql.DataFrame, n: org.apache.spark.sql.DataFrame) =
+        (e.as[(Long, Long)].collect().toSet,
+          n.select(col("da"), col("db")).as[(Long, Long)].collect().toSet)
+      val (le, ln) = DedupIngest.gateBatch(next, live.cs, "doc_id", "text")
+      val (re, rn) = DedupIngest.gateBatch(next, restored.cs, "doc_id", "text")
+      assert(pairs(re, rn) == pairs(le, ln),
+        "restored state must answer probes like the live state")
+
+      val ((fe, fn), folded) = DedupIngest.foldBatch(next, restored, "doc_id", "text",
+        0.5, None, 1L)
+      val (exact, near) = pairs(fe, fn)
+      assert(exact.contains((800002L, targets(1)._1)) && exact.contains((800003L, held(1)._1)) &&
+          exact.contains((820000L, targets(2)._1)),
+        s"live docs must still pair exactly: $exact")
+      assert(near.nonEmpty, s"fixture: no near pair at all")
+      assert(!(exact ++ near).exists(p => retired(p._2)),
+        s"retired ids surfaced after the restart: ${(exact ++ near).filter(p => retired(p._2))}")
+      assert(folded.tombstones == retired, "folds carry the tombstones forward")
     } finally spark.conf.unset("graft.stage.dir")
   }
 
