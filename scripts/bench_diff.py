@@ -2,6 +2,7 @@
 """Calib-normalized comparison of two Bench metric JSON lines.
 
 Usage: bench_diff.py OLD.json NEW.json
+       bench_diff.py --self-test
 
 Accepts either a raw `{"metric":...}` line (as Bench prints) or the
 driver's BENCH_r{N}.json wrapper (uses its `tail` / `parsed` field).
@@ -15,9 +16,16 @@ per-query `queries` seconds are best-of-3 and immune; wall-clock and any
 naive mean are NOT. When `runs` are present, queries whose first run
 exceeds 2x their best are flagged so nobody mistakes warmup for a plan
 regression.
+
+A failed key (Bench prints it as -1.0 and names it in `failed`) is shown
+as FAILED, never as a speedup, and a side with any failed key has a
+FAILED total: a failure must not shrink the bench total. `--self-test`
+checks this on synthetic lines.
 """
 import json
+import os
 import sys
+import tempfile
 
 
 def load(path):
@@ -47,6 +55,20 @@ def load(path):
     raise SystemExit(f"{path}: no bench metric line found")
 
 
+def _total(values):
+    """Sum of the numeric per-key seconds; -1.0 (failed) if any is."""
+    nums = [v for v in values if isinstance(v, (int, float))]
+    return -1.0 if any(v < 0 for v in nums) else sum(nums)
+
+
+def failed_keys(d):
+    """Keys the line names in `failed`, plus any with a negative time."""
+    out = set(d.get("failed") or [])
+    out.update(q for q, v in d.get("queries", {}).items()
+               if isinstance(v, (int, float)) and v < 0)
+    return sorted(out)
+
+
 def _fill_best(d):
     """r16+ lines carry a compact `best` map at the line's END (the part
     the driver's tail-keeping wrapper preserves) — it is authoritative
@@ -57,9 +79,8 @@ def _fill_best(d):
         # a reopened-tail q can still carry the '__trunc' stub or
         # list-valued (mis-bound runs) entries here — the value
         # fallback must not sum junk (or crash on a list).
-        d.setdefault("value", sum(v for k, v in q.items()
-                                  if k != "__trunc"
-                                  and isinstance(v, (int, float))))
+        d.setdefault("value", _total(v for k, v in q.items()
+                                     if k != "__trunc"))
     return d
 
 
@@ -90,8 +111,7 @@ def _finish_tail(d):
             q[k] = min(r)
     if not q:
         return None  # nothing salvageable — caller keeps scanning
-    d.setdefault("value", sum(v for v in q.values()
-                              if isinstance(v, (int, float))))
+    d.setdefault("value", _total(q.values()))
     return d
 
 
@@ -166,7 +186,7 @@ def _from_tail(tail):
                 if isinstance(r, list) and r}
         if runs:
             d["queries"] = {q: min(r) for q, r in runs.items()}
-            d.setdefault("value", sum(d["queries"].values()))
+            d.setdefault("value", _total(d["queries"].values()))
             return d
     return None
 
@@ -182,20 +202,33 @@ def cold_outliers(d):
     return out
 
 
-def main():
-    if len(sys.argv) != 3:
-        raise SystemExit(__doc__)
-    old, new = load(sys.argv[1]), load(sys.argv[2])
+def fmt_total(d):
+    if d["value"] < 0 or failed_keys(d):
+        return "FAILED"
+    return f"{d['value']:.2f}s"
+
+
+def report(old, new):
+    """The comparison as lines of text."""
+    out = []
     co, cn = old.get("calib"), new.get("calib")
     if not co or not cn:
-        print("WARNING: missing calib in one side; falling back to raw deltas")
+        out.append("WARNING: missing calib in one side; falling back to raw deltas")
         co = cn = 1.0
-    print(f"calib: old={co:.3f} new={cn:.3f}   "
-          f"total: old={old['value']:.2f}s new={new['value']:.2f}s")
+    out.append(f"calib: old={co:.3f} new={cn:.3f}   "
+               f"total: old={fmt_total(old)} new={fmt_total(new)}")
+    fo, fn = failed_keys(old), failed_keys(new)
+    for side, keys in (("old", fo), ("new", fn)):
+        if keys:
+            out.append(f"failed ({side}): {', '.join(keys)}")
     rows = []
     for q, sec in sorted(new["queries"].items()):
         osec = old["queries"].get(q)
-        if osec is None:
+        if q in fn or (osec is not None and q in fo):
+            o = "FAILED" if q in fo else f"{osec:6.2f}"
+            n = "FAILED" if q in fn else f"{sec:6.2f}"
+            rows.append((float("inf"), f"{q:28s} old={o:>6s} new={n:>6s}  FAILED"))
+        elif osec is None:
             rows.append((0.0, f"{q:28s} NEW        new={sec:6.2f}"))
         elif osec <= 0:
             # a sub-centisecond query recorded as 0.0 — no meaningful
@@ -207,16 +240,58 @@ def main():
             rows.append((delta, f"{q:28s} old={osec:6.2f} "
                                 f"new={sec:6.2f}  norm {delta:+.0%}"))
     for _, line in sorted(rows, key=lambda r: -r[0]):
-        print(line)
+        out.append(line)
     gone = sorted(set(old["queries"]) - set(new["queries"]))
     for q in gone:
-        print(f"{q:28s} REMOVED    old={old['queries'][q]:6.2f}")
+        o = "FAILED" if q in fo else f"{old['queries'][q]:6.2f}"
+        out.append(f"{q:28s} REMOVED    old={o}")
     cold = cold_outliers(new)
     if cold:
-        print("\ncold-run outliers in NEW (first run > 2x best — JIT/codegen "
-              "warmup; best-of-3 seconds above are unaffected):")
+        out.append("\ncold-run outliers in NEW (first run > 2x best — JIT/codegen "
+                   "warmup; best-of-3 seconds above are unaffected):")
         for q, ratio, first, best in cold:
-            print(f"  {q:28s} first={first:6.2f} best={best:6.2f}  x{ratio:.1f}")
+            out.append(f"  {q:28s} first={first:6.2f} best={best:6.2f}  x{ratio:.1f}")
+    return out
+
+
+def self_test():
+    """A failed key must not read as a speedup nor shrink the total."""
+    old = {"metric": "total", "queries": {"a": 1.0, "b": 2.0},
+           "best": {"a": 1.0, "b": 2.0}, "calib": 1.0, "failed": [],
+           "value": 3.0}
+    new = {"metric": "total", "queries": {"a": 1.0, "b": -1.0},
+           "best": {"a": 1.0, "b": -1.0}, "calib": 1.0, "failed": ["b"],
+           "value": -1.0}
+    with tempfile.TemporaryDirectory() as tmp:
+        paths = []
+        for name, d in (("old", old), ("new", new)):
+            paths.append(os.path.join(tmp, name + ".json"))
+            with open(paths[-1], "w") as f:
+                f.write(json.dumps(d) + "\n")
+        lines = report(load(paths[0]), load(paths[1]))
+        text = "\n".join(lines)
+        assert "total: old=3.00s new=FAILED" in text, text
+        assert "failed (new): b" in text, text
+        assert "failed (old)" not in text, text
+        b = [ln for ln in lines if ln.startswith("b ")]
+        assert len(b) == 1 and "FAILED" in b[0] and "norm" not in b[0], text
+        # a line cut before `value` totals its `best` map through the
+        # -1.0 sentinel.
+        del new["value"]
+        with open(paths[1], "w") as f:
+            f.write(json.dumps(new) + "\n")
+        assert load(paths[1])["value"] == -1.0
+    print("bench_diff self-test: ok")
+
+
+def main():
+    if sys.argv[1:] == ["--self-test"]:
+        self_test()
+        return
+    if len(sys.argv) != 3:
+        raise SystemExit(__doc__)
+    for line in report(load(sys.argv[1]), load(sys.argv[2])):
+        print(line)
 
 
 if __name__ == "__main__":

@@ -1126,10 +1126,6 @@ object Graph {
   final case class PageRankState(edges: DataFrame, ranks: DataFrame,
                                  iterations: Int, scale: Long)
 
-  /** Run [[pageRank]]'s exact loop once, keeping every iterate — the
-    * build-once step of the incremental-refresh pair (same staging and
-    * overflow contract as [[pageRank]]; history costs `iterations` extra
-    * BIGINTs per edge-incident node). */
   /** Stage a relation RANGE-SORTED on `key`: each staged file covers a
     * disjoint key range, so a refresh probe's pushed `In`/range filter
     * prunes whole row groups via parquet zone maps — the
@@ -1151,6 +1147,10 @@ object Graph {
     stage(df.repartitionByRange(shards, col(key)).sortWithinPartitions(col(key)))
   }
 
+  /** Run [[pageRank]]'s exact loop once, keeping every iterate — the
+    * build-once step of the incremental-refresh pair (same staging and
+    * overflow contract as [[pageRank]]; history costs `iterations` extra
+    * BIGINTs per edge-incident node). */
   def pageRankState(edges: DataFrame, srcCol: String, dstCol: String,
                     iterations: Int = 3, scale: Long = 1000000000L): PageRankState = {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
@@ -1182,32 +1182,6 @@ object Graph {
       iterations, scale)
   }
 
-  /** INCREMENTAL PageRank refresh under a batch of new edges — re-iterate
-    * only the batch's expanding neighborhood against frozen stored
-    * iterates, landing on ranks BIT-IDENTICAL to a full recompute over
-    * the union edge set.
-    *
-    * Why exact: r_i(v) changes only if some in-neighbor u had a changed
-    * r_{i-1} or a changed degree, or the edge u→v is new. Degrees change
-    * only at batch endpoints (B_0); both endpoints of every new edge are
-    * in B_0; so with B_i = union-graph neighbors of B_{i-1} (monotone:
-    * B_0 ⊆ B_1 ⊆ …), every node OUTSIDE B_i keeps its stored r_i
-    * verbatim. The refresh recomputes r_i for B_i only, reading frozen
-    * history (`rs[i-1]`, stored degree) for boundary in-neighbors.
-    *
-    * Plan shape (the per-batch contract): the batch's ≤2|batch| endpoint
-    * degrees are settled once via one broadcast lookup and MATERIALIZED
-    * to a local relation (same by-contract-bounded collect as
-    * [[incrementalComponents]]); each iteration scans the staged union
-    * edges twice (frontier + in-edges, both against a broadcast frontier)
-    * and the staged rank history twice (boundary ranks + frontier
-    * degrees, both broadcast-probed) — every OTHER relation in flight is
-    * ball-sized (≤ |batch| × max-degree^i; for batches touching massive
-    * hubs the ball approaches the subgraph and a full [[pageRank]] is the
-    * better plan). The corpus-sized `vertices` is touched exactly once,
-    * by the final broadcast attach.
-    *
-    * Output: (node, pr) for EVERY vertex — the [[pageRank]] contract. */
   /** Compress a sorted-or-not id set into at most `maxRanges` inclusive
     * [lo, hi] ranges by closing the smallest inter-id gaps first —
     * localized balls collapse to a few tight spans, scattered ones
@@ -1230,6 +1204,18 @@ object Graph {
       out.toSeq
     }
   }
+
+  /** Point-set probe on a range-sorted state relation, zone-map-aligned
+    * and stack-safe: a bounded disjunction of [[compressRanges]] spans
+    * pushes to parquet, and the exact membership filter evaluates
+    * post-scan (see the probe-shape note in `refreshCore`). */
+  private def inIds(c: org.apache.spark.sql.Column, ids: Seq[Long]): org.apache.spark.sql.Column =
+    if (ids.isEmpty) lit(false)
+    else {
+      val ranges = compressRanges(ids, maxRanges = 32)
+      ranges.map { case (lo, hi) => c.between(lo, hi) }.reduce(_ || _) &&
+        c.isInCollection(ids)
+    }
 
   /** Ball fraction of the (stored) node set past which the refresh HANDS
     * OFF to the full recompute: once one hop from the batch covers more
@@ -1255,15 +1241,6 @@ object Graph {
     val k = st.iterations
     val scale = st.scale
     val base = scale * 3 / 20
-    // Point-set probe, zone-map-aligned and stack-safe — see inIds below;
-    // defined up front because the batch settle already needs it.
-    def inIds(c: org.apache.spark.sql.Column, ids: Seq[Long]): org.apache.spark.sql.Column =
-      if (ids.isEmpty) lit(false)
-      else {
-        val ranges = compressRanges(ids, maxRanges = 32)
-        ranges.map { case (lo, hi) => c.between(lo, hi) }.reduce(_ || _) &&
-          c.isInCollection(ids)
-      }
     // NOVELTY SETTLES DRIVER-SIDE: the batch is by contract tiny, so its
     // symmetrized pairs collect, and existing duplicates are looked up
     // via a PRUNED probe of the sorted edge state (incident edges of the
@@ -1398,6 +1375,32 @@ object Graph {
     Right(RefreshCore(delta, a0Deg, recs, ball))
   }
 
+  /** INCREMENTAL PageRank refresh under a batch of new edges — re-iterate
+    * only the batch's expanding neighborhood against frozen stored
+    * iterates, landing on ranks BIT-IDENTICAL to a full recompute over
+    * the union edge set.
+    *
+    * Why exact: r_i(v) changes only if some in-neighbor u had a changed
+    * r_{i-1} or a changed degree, or the edge u→v is new. Degrees change
+    * only at batch endpoints (B_0); both endpoints of every new edge are
+    * in B_0; so with B_i = union-graph neighbors of B_{i-1} (monotone:
+    * B_0 ⊆ B_1 ⊆ …), every node OUTSIDE B_i keeps its stored r_i
+    * verbatim. The refresh recomputes r_i for B_i only, reading frozen
+    * history (`rs[i-1]`, stored degree) for boundary in-neighbors.
+    *
+    * Plan shape (the per-batch contract): the batch's ≤2|batch| endpoint
+    * degrees are settled once via one broadcast lookup and MATERIALIZED
+    * to a local relation (same by-contract-bounded collect as
+    * [[incrementalComponents]]); each iteration scans the staged union
+    * edges twice (frontier + in-edges, both against a broadcast frontier)
+    * and the staged rank history twice (boundary ranks + frontier
+    * degrees, both broadcast-probed) — every OTHER relation in flight is
+    * ball-sized (≤ |batch| × max-degree^i; for batches touching massive
+    * hubs the ball approaches the subgraph and a full [[pageRank]] is the
+    * better plan). The corpus-sized `vertices` is touched exactly once,
+    * by the final broadcast attach.
+    *
+    * Output: (node, pr) for EVERY vertex — the [[pageRank]] contract. */
   def pageRankRefresh(vertices: DataFrame, idCol: String, st: PageRankState,
                       newEdges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val base = st.scale * 3 / 20
@@ -1501,6 +1504,19 @@ object Graph {
     * cannot prune). The doubled layout is the honest price of pruned
     * directed refreshes; compaction re-sorts both sides.
     *
+    * `local` is the DRIVER COPY of a bounded state: when the distinct
+    * edge set has at most `localThreshold` edges
+    * ([[DefaultLocalThreshold]], the [[connectedComponents]] bound), the
+    * build runs the iterations on the driver and keeps the graph and its
+    * history as primitive arrays ([[DirectedLocal]]: two ints per edge,
+    * two ints and 1 + `iterations` longs per node — at most 44 MiB at
+    * the default bound and 3 iterations). A refresh then answers every
+    * lookup from the copy and starts no probe job; the staged relations
+    * stay the state's durable form (compaction, the splice, callers'
+    * reads). Folds carry the copy forward while the union stays under
+    * the bound and drop it past it, so what the driver holds never
+    * exceeds the bound.
+    *
     * The LEAK dangling rule only ([[pageRankDirected]]'s default):
     * `redistributeDangling` breaks the refresh's locality theorem — a
     * global Σr term makes every rank depend on every dangling node, so
@@ -1509,22 +1525,180 @@ object Graph {
   final case class PageRankDirectedState(edgesBySrc: DataFrame,
                                          edgesByDst: DataFrame,
                                          ranks: DataFrame,
-                                         iterations: Int, scale: Long)
+                                         iterations: Int, scale: Long,
+                                         local: Option[DirectedLocal] = None)
+
+  /** The driver copy of a bounded [[PageRankDirectedState]]: `nodes` is
+    * the sorted edge-incident node set; node `j`'s out-neighbors are
+    * `outDst(outOff(j) until outOff(j + 1))` and its in-neighbors
+    * `inSrc(inOff(j) until inOff(j + 1))`, both as ascending node
+    * indices; its out-degree is the out-range's length and
+    * `rs(j * iterations + i - 1)` its exact rank after iteration i. */
+  final class DirectedLocal private[operators] (
+      val nodes: Array[Long],
+      val outOff: Array[Int], val outDst: Array[Int],
+      val inOff: Array[Int], val inSrc: Array[Int],
+      val rs: Array[Long], val iterations: Int) {
+    def edgeCount: Int = outDst.length
+    private[operators] def indexOf(node: Long): Int =
+      java.util.Arrays.binarySearch(nodes, node)
+    private[operators] def degree(j: Int): Long = (outOff(j + 1) - outOff(j)).toLong
+
+    /** This graph plus the `novel` edges, with the history spliced as
+      * the fold's contract states: rs'[i] is the recomputed r_i on B_i
+      * (`recRows(i - 1)`) and the stored rs[i] elsewhere. Every new node
+      * lies in B_1 ⊆ B_i, so each of its rows is recomputed. */
+    private[operators] def grow(novel: Seq[(Long, Long)],
+                                recRows: Vector[Seq[(Long, Long, Long)]]): DirectedLocal = {
+      val k = iterations
+      val src = new Array[Long](edgeCount + novel.size)
+      val dst = new Array[Long](src.length)
+      var e = 0
+      for (j <- nodes.indices; x <- outOff(j) until outOff(j + 1)) {
+        src(e) = nodes(j); dst(e) = nodes(outDst(x)); e += 1
+      }
+      novel.foreach { case (s, d) => src(e) = s; dst(e) = d; e += 1 }
+      val g = directedCsr(src, dst, k)
+      for (j <- g.nodes.indices) {
+        val o = indexOf(g.nodes(j))
+        if (o >= 0) System.arraycopy(rs, o * k, g.rs, j * k, k)
+      }
+      for (i <- 1 to k; (x, _, r) <- recRows(i - 1)) g.rs(g.indexOf(x) * k + i - 1) = r
+      g
+    }
+  }
+
+  /** CSR layout of a distinct, loop-free edge list; history zeroed. */
+  private def directedCsr(src: Array[Long], dst: Array[Long], k: Int): DirectedLocal = {
+    val ends = new Array[Long](src.length * 2)
+    System.arraycopy(src, 0, ends, 0, src.length)
+    System.arraycopy(dst, 0, ends, src.length, dst.length)
+    java.util.Arrays.sort(ends)
+    val nodes = ends.indices.collect {
+      case i if i == 0 || ends(i) != ends(i - 1) => ends(i)
+    }.toArray
+    val si = src.map(java.util.Arrays.binarySearch(nodes, _))
+    val di = dst.map(java.util.Arrays.binarySearch(nodes, _))
+    // counting sort of edge `e` under key(e); each node's run ascending.
+    def group(key: Array[Int], value: Array[Int]): (Array[Int], Array[Int]) = {
+      val off = new Array[Int](nodes.length + 1)
+      key.foreach(j => off(j + 1) += 1)
+      for (j <- nodes.indices) off(j + 1) += off(j)
+      val fill = off.clone()
+      val out = new Array[Int](key.length)
+      for (e <- key.indices) { out(fill(key(e))) = value(e); fill(key(e)) += 1 }
+      for (j <- nodes.indices) java.util.Arrays.sort(out, off(j), off(j + 1))
+      (off, out)
+    }
+    val (outOff, outDst) = group(si, di)
+    val (inOff, inSrc) = group(di, si)
+    new DirectedLocal(nodes, outOff, outDst, inOff, inSrc,
+      new Array[Long](nodes.length * k), k)
+  }
+
+  /** [[pageRankDirected]]'s k iterations on the driver, filling `g.rs`.
+    * A source's contribution `(r·17) div (20·outdeg)` is the same on each
+    * of its edges, and long addition commutes, so the sums equal the
+    * distributed join + group-by bitwise (Scala `/` on non-negative
+    * longs ≡ SQL `div`). */
+  private def iterateLocal(g: DirectedLocal, scale: Long): Unit = {
+    val k = g.iterations
+    val base = scale * 3 / 20
+    val n = g.nodes.length
+    var r = Array.fill(n)(scale)
+    for (i <- 1 to k) {
+      val c = Array.tabulate(n) { u =>
+        val du = g.degree(u)
+        if (du == 0) 0L else (r(u) * 17L) / (20L * du)
+      }
+      val next = new Array[Long](n)
+      for (v <- 0 until n) {
+        var acc = 0L
+        var e = g.inOff(v)
+        while (e < g.inOff(v + 1)) { acc += c(g.inSrc(e)); e += 1 }
+        next(v) = base + acc
+        g.rs(v * k + i - 1) = next(v)
+      }
+      r = next
+    }
+  }
+
+  /** Stage rows already sorted on `key` as `numShufflePartitions`
+    * contiguous slices, each cut moved forward to a key boundary: every
+    * staged file covers a disjoint key range — [[stageSorted]]'s layout,
+    * without its range shuffle and sampling job. */
+  private def stageSortedRows[T: scala.reflect.ClassTag: org.apache.spark.sql.Encoder](
+      spark: org.apache.spark.sql.SparkSession, rows: Array[T], key: T => Long,
+      names: String*): DataFrame = {
+    val shards = spark.sessionState.conf.numShufflePartitions
+    val cuts = (1 until shards).map { j =>
+      var c = (rows.length.toLong * j / shards).toInt
+      while (c > 0 && c < rows.length && key(rows(c)) == key(rows(c - 1))) c += 1
+      c
+    }
+    val bounds = 0 +: cuts :+ rows.length
+    val slices = bounds.indices.dropRight(1).map(j => rows.slice(bounds(j), bounds(j + 1)))
+    stage(spark.createDataset(
+      spark.sparkContext.parallelize(slices, slices.size).flatMap(_.iterator))
+      .toDF(names: _*))
+  }
+
+  /** A [[PageRankDirectedState]] holding the driver-built graph `g`: its
+    * three relations emitted from the copy, sorted, and staged
+    * concurrently. */
+  private def localDirectedState(spark: org.apache.spark.sql.SparkSession,
+                                 g: DirectedLocal, scale: Long): PageRankDirectedState = {
+    import spark.implicits._
+    val bySrc = for (j <- g.nodes.indices; e <- g.outOff(j) until g.outOff(j + 1))
+      yield (g.nodes(j), g.nodes(g.outDst(e)))
+    val byDst = for (j <- g.nodes.indices; e <- g.inOff(j) until g.inOff(j + 1))
+      yield (g.nodes(g.inSrc(e)), g.nodes(j))
+    val Seq(eS, eD, r) = graft.sources.Tables.inParallel(Seq(
+      () => stageSortedRows(spark, bySrc.toArray, (e: (Long, Long)) => e._1, "s", "d"),
+      () => stageSortedRows(spark, byDst.toArray, (e: (Long, Long)) => e._2, "s", "d"),
+      () => localRanks(spark, g)))
+    PageRankDirectedState(eS, eD, r, g.iterations, scale, Some(g))
+  }
+
+  /** The (node, degree, rs) relation of a driver copy, sorted and staged. */
+  private def localRanks(spark: org.apache.spark.sql.SparkSession, g: DirectedLocal): DataFrame = {
+    import spark.implicits._
+    val k = g.iterations
+    stageSortedRows(spark,
+      g.nodes.indices.map(j => (g.nodes(j), g.degree(j), g.rs.slice(j * k, j * k + k))).toArray,
+      (x: (Long, Long, Array[Long])) => x._1, "node", "degree", "rs")
+  }
 
   /** Run [[pageRankDirected]]'s exact loop once, keeping every iterate
     * — the build-once step of the directed incremental pair (same
     * staging/overflow contract; history costs `iterations` extra
-    * BIGINTs per edge-incident node, the layout one extra edge sort). */
+    * BIGINTs per edge-incident node, the layout one extra edge sort).
+    *
+    * The distinct, loop-free edge set is collected once, up to
+    * `localThreshold + 1` edges. Within the bound the iterations run on
+    * the driver and the state keeps the driver copy
+    * ([[PageRankDirectedState]]); past it, or with `localThreshold = 0`,
+    * the distributed build runs. */
   def pageRankDirectedState(edges: DataFrame, srcCol: String, dstCol: String,
                             iterations: Int = 3,
-                            scale: Long = 1000000000L): PageRankDirectedState = {
+                            scale: Long = 1000000000L,
+                            localThreshold: Long = DefaultLocalThreshold): PageRankDirectedState = {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
     require(scale % 20 == 0, s"scale=$scale must be divisible by 20")
     val base = scale * 3 / 20
-    val eS = stageSorted(edges
+    val e = edges
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
       .filter(col("s") =!= col("d"))
-      .distinct(), "s")
+      .distinct()
+    if (localThreshold > 0) {
+      val rows = e.limit(math.min(localThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+      if (rows.length <= localThreshold) {
+        val g = directedCsr(rows.map(_.getLong(0)), rows.map(_.getLong(1)), iterations)
+        iterateLocal(g, scale)
+        return localDirectedState(e.sparkSession, g, scale)
+      }
+    }
+    val eS = stageSorted(e, "s")
     // the d-sorted layout and the rank-history build both read ONLY the
     // staged eS — independent branches, so the d-sort's shuffle+sort job
     // overlaps the whole iteration chain instead of running before it
@@ -1553,9 +1727,82 @@ object Graph {
     PageRankDirectedState(eS, eDDeferred(), ranks, iterations, scale)
   }
 
-  private final case class DirRefreshCore(delta: DataFrame,
-                                          recs: Vector[DataFrame],
-                                          ball: DataFrame)
+  /** The directed refresh's reads of STORED state: the out-edges and
+    * in-edges of a node set, the stored (out-degree, r_i) of nodes
+    * (r_0 = scale), and the stored node count. */
+  private trait DirectedLookups {
+    def nodeCount: Long
+    def outEdges(ids: Seq[Long]): Seq[(Long, Long)]
+    /** (out-edges, in-edges) of `ids`. */
+    def ballEdges(ids: Seq[Long]): (Seq[(Long, Long)], Seq[(Long, Long)])
+    def history(ids: Seq[Long], i: Int): Map[Long, (Long, Long)]
+  }
+
+  /** Lookups answered by the driver copy — no Spark job. */
+  private final class LocalLookups(g: DirectedLocal, scale: Long) extends DirectedLookups {
+    def nodeCount: Long = g.nodes.length.toLong
+    private def adjacent(ids: Seq[Long], off: Array[Int], nb: Array[Int],
+                         edge: (Long, Long) => (Long, Long)): Seq[(Long, Long)] =
+      ids.flatMap { x =>
+        val j = g.indexOf(x)
+        if (j < 0) Nil else (off(j) until off(j + 1)).map(e => edge(x, g.nodes(nb(e))))
+      }
+    def outEdges(ids: Seq[Long]): Seq[(Long, Long)] =
+      adjacent(ids, g.outOff, g.outDst, (x, y) => (x, y))
+    def ballEdges(ids: Seq[Long]): (Seq[(Long, Long)], Seq[(Long, Long)]) =
+      (outEdges(ids), adjacent(ids, g.inOff, g.inSrc, (x, y) => (y, x)))
+    def history(ids: Seq[Long], i: Int): Map[Long, (Long, Long)] =
+      ids.map { x =>
+        val j = g.indexOf(x)
+        x -> ((g.degree(j), if (i == 0) scale else g.rs(j * g.iterations + i - 1)))
+      }.toMap
+  }
+
+  /** Lookups as pruned parquet probes of the range-sorted relations:
+    * a pushed point-set filter reads only the row groups whose zone maps
+    * cover the ids. */
+  private final class ParquetLookups(st: PageRankDirectedState) extends DirectedLookups {
+    // the dense-handoff gate's stored-node count depends on nothing
+    // batch-side — start it NOW so it overlaps the settle probe
+    // (guide §2.6).
+    private val count = graft.sources.Tables.defer(() => st.ranks.count())
+    def nodeCount: Long = count()
+    private def probe(rel: DataFrame, key: String, ids: Seq[Long]): Seq[(Long, Long)] =
+      rel.filter(inIds(col(key), ids)).select(col("s"), col("d"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def outEdges(ids: Seq[Long]): Seq[(Long, Long)] = probe(st.edgesBySrc, "s", ids)
+    def ballEdges(ids: Seq[Long]): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+      // both probes read only frozen state and the same ids —
+      // independent, so they run CONCURRENTLY (guide §2.6).
+      val Seq(out, in) = graft.sources.Tables.inParallel(Seq(
+        () => outEdges(ids), () => probe(st.edgesByDst, "d", ids)))
+      (out, in)
+    }
+    def history(ids: Seq[Long], i: Int): Map[Long, (Long, Long)] =
+      st.ranks.filter(inIds(col("node"), ids))
+        .select(col("node"), col("degree"),
+          (if (i == 0) lit(st.scale) else element_at(col("rs"), i)).as("r"))
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+  }
+
+  /** A ball refresh: the batch's novel edges and the per-iteration
+    * recomputed (node, degree, r) rows — `recRows(i - 1)` covers B_i,
+    * and the last covers the whole monotone ball. */
+  private final case class DirRefreshCore(novel: Seq[(Long, Long)],
+                                          recRows: Vector[Seq[(Long, Long, Long)]]) {
+    def recs(spark: org.apache.spark.sql.SparkSession): Vector[DataFrame] =
+      recRows.map(rows => spark.createDataset(rows)(
+        org.apache.spark.sql.Encoders.product[(Long, Long, Long)])
+        .toDF("node", "degree", "r"))
+    def ball(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      spark.createDataset(recRows.last.map(r => Tuple1(r._1)))(
+        org.apache.spark.sql.Encoders.product[Tuple1[Long]]).toDF("node")
+  }
+
+  private def edgeRelation(spark: org.apache.spark.sql.SparkSession,
+                           pairs: Seq[(Long, Long)]): DataFrame =
+    spark.createDataset(pairs)(
+      org.apache.spark.sql.Encoders.product[(Long, Long)]).toDF("s", "d")
 
   /** The directed sibling of `refreshCore`. Exactness: r_i(v) changes
     * only if some IN-neighbor u of v changed r_{i-1} or OUT-degree.
@@ -1566,48 +1813,34 @@ object Graph {
     * node an iteration didn't change lands on the same value — its
     * inputs are all recomputed-correct or frozen-correct).
     *
-    * Per iteration: TWO pruned edge probes (out-edges of B_i — degrees
-    * + the B_{i+1} expansion; IN-edges of B_i — the contributions,
-    * pruned by the d-sorted layout) plus one pruned history probe for
-    * boundary in-neighbors. The undirected core needs one edge probe
-    * (symmetry makes reversed out-edges the in-edges); the doubled
-    * probe is the honest directed price. Iterations run on the driver
-    * (ball-sized by contract; Scala `/` on non-negative longs ≡ SQL
-    * `div`). Dense handoff as the undirected core
-    * ([[RefreshDenseFraction]]). */
-  private def refreshDirectedCore(spark: org.apache.spark.sql.SparkSession,
-                                  st: PageRankDirectedState, newEdges: DataFrame,
-                                  srcCol: String, dstCol: String): Either[DataFrame, DirRefreshCore] = {
+    * The batch is tiny by contract: it collects once and dedupes on the
+    * driver. Per iteration the core reads the out-edges of B_i (degrees
+    * + the B_{i+1} expansion), the IN-edges of B_i (the contributions)
+    * and the frozen history of boundary in-neighbors, each as stored
+    * state ([[DirectedLookups]]: the driver copy when the state holds
+    * one, pruned parquet probes otherwise — two edge probes, since a
+    * src-sorted layout cannot prune in-edges) plus the batch's novel
+    * edges. Iterations run on the driver (ball-sized by contract; Scala
+    * `/` on non-negative longs ≡ SQL `div`). Dense handoff as the
+    * undirected core ([[RefreshDenseFraction]]): Left(novel edges). */
+  private def refreshDirectedCore(st: PageRankDirectedState, newEdges: DataFrame,
+                                  srcCol: String, dstCol: String)
+      : Either[Seq[(Long, Long)], DirRefreshCore] = {
     val k = st.iterations
     val scale = st.scale
     val base = scale * 3 / 20
-    def inIds(c: org.apache.spark.sql.Column, ids: Seq[Long]): org.apache.spark.sql.Column =
-      if (ids.isEmpty) lit(false)
-      else {
-        val ranges = compressRanges(ids, maxRanges = 32)
-        ranges.map { case (lo, hi) => c.between(lo, hi) }.reduce(_ || _) &&
-          c.isInCollection(ids)
-      }
-    // the dense-handoff gate's stored-node count depends on nothing
-    // batch-side — start it NOW so it overlaps the settle probes
-    // (guide §2.6).
-    val ranksCount = graft.sources.Tables.defer(() => st.ranks.count())
+    val stored: DirectedLookups = st.local match {
+      case Some(g) => new LocalLookups(g, scale)
+      case None => new ParquetLookups(st)
+    }
     val batchPairs = newEdges
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
       .filter(col("s") =!= col("d"))
-      .distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // settle probe: every stored out-edge of the batch sources — gives
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.distinct
+    // settle: every stored out-edge of the batch sources — gives
     // novelty AND the stored out-degrees for free.
-    val existing = st.edgesBySrc
-      .filter(inIds(col("s"), batchPairs.map(_._1).distinct))
-      .select(col("s"), col("d"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val existing = stored.outEdges(batchPairs.map(_._1).distinct.sorted).toSet
     val novel = batchPairs.filterNot(existing)
-    val delta = stage(spark.createDataset(novel)(
-      org.apache.spark.sql.Encoders.product[(Long, Long)]).toDF("s", "d"))
-    val allES = st.edgesBySrc.union(delta)
-    val allED = st.edgesByDst.union(delta)
     val dIncRows = novel.groupBy(_._1).view.mapValues(_.size.toLong).toSeq
       .sortBy(_._1)
     val b0Ids = dIncRows.map(_._1)
@@ -1616,40 +1849,30 @@ object Graph {
     val a0Rows = dIncRows.map { case (n, di) =>
       (n, storedDeg.getOrElse(n, 0L) + di) }
     val b0Set = b0Ids.toSet
-    // B_1 = outN(B_0) ∪ B_0 — derivable from the settle probe alone.
+    // B_1 = outN(B_0) ∪ B_0 — derivable from the settle alone.
     var biIds: Seq[Long] =
       (existing.toSeq.filter(e => b0Set(e._1)).map(_._2) ++ novel.map(_._2)
         ++ b0Ids).distinct.sorted
-    if (biIds.size > ranksCount() * RefreshDenseFraction)
-      return Left(allES)
+    if (biIds.size > stored.nodeCount * RefreshDenseFraction)
+      return Left(novel)
     // recMap: node -> (current OUT-degree, r_{i-1}) over B_{i-1}; r_0 =
     // scale everywhere.
     var recMap: Map[Long, (Long, Long)] =
       a0Rows.map { case (n, dg) => n -> (dg, scale) }.toMap
     var recMaps = Vector.empty[Seq[(Long, Long, Long)]]
     for (i <- 1 to k) {
-      // probe 1: out-edges of B_i under the union — per-node counts are
-      // the CURRENT degrees of every ball node (B_0's increments
-      // included, since delta rides the union), dsts are the B_{i+1}
-      // expansion. probe 2: IN-edges of B_i (the d-sorted layout prunes
-      // on d). Both probes read only frozen state + the SAME biIds —
-      // independent, so they run CONCURRENTLY (guide §2.6; halves each
-      // iteration's probe wall).
-      val Seq(outEdges, inEdges) = graft.sources.Tables.inParallel(Seq(
-        () => allES.filter(inIds(col("s"), biIds))
-          .select(col("s"), col("d"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))),
-        () => allED.filter(inIds(col("d"), biIds))
-          .select(col("s"), col("d"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))))
+      // out-edges of B_i under the union — per-node counts are the
+      // CURRENT degrees of every ball node, dsts the B_{i+1} expansion;
+      // in-edges of B_i carry the contributions.
+      val ball = biIds.toSet
+      val (storedOut, storedIn) = stored.ballEdges(biIds)
+      val outEdges = storedOut ++ novel.filter(e => ball(e._1))
+      val inEdges = storedIn ++ novel.filter(e => ball(e._2))
       val degCount = outEdges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
       // boundary in-neighbors outside B_{i-1} read frozen history
       // (r_{i-1} = rs[i-1], r_0 = scale; degree unchanged outside B_0).
-      val needOldIds = inEdges.map(_._1).distinct.filterNot(recMap.contains).sorted.toSeq
-      val oldRows = st.ranks.filter(inIds(col("node"), needOldIds))
-        .select(col("node"), col("degree"),
-          (if (i == 1) lit(scale) else element_at(col("rs"), i - 1)).as("r"))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      val needOldIds = inEdges.map(_._1).distinct.filterNot(recMap.contains).sorted
+      val oldRows = stored.history(needOldIds, i - 1)
       val contrib = new scala.collection.mutable.HashMap[Long, Long]()
       inEdges.foreach { case (u, v) =>
         val (du, ru) = recMap.getOrElse(u, oldRows(u))
@@ -1660,16 +1883,9 @@ object Graph {
       }
       recMaps = recMaps :+ next
       recMap = next.map { case (n, dg, r) => n -> ((dg, r)) }.toMap
-      biIds = (outEdges.map(_._2) ++ biIds).distinct.sorted.toSeq
+      biIds = (outEdges.map(_._2) ++ biIds).distinct.sorted
     }
-    val recs = recMaps.map(rows => spark.createDataset(rows)(
-      org.apache.spark.sql.Encoders.product[(Long, Long, Long)])
-      .toDF("node", "degree", "r"))
-    // the monotone ball: every iteration's cover is a subset of the
-    // LAST recomputed set's ids.
-    val ball = spark.createDataset(recMaps.last.map(r => Tuple1(r._1)))(
-      org.apache.spark.sql.Encoders.product[Tuple1[Long]]).toDF("node")
-    Right(DirRefreshCore(delta, recs, ball))
+    Right(DirRefreshCore(novel, recMaps))
   }
 
   /** Incremental [[pageRankDirected]] under a batch of new edges —
@@ -1679,19 +1895,21 @@ object Graph {
   def pageRankDirectedRefresh(vertices: DataFrame, idCol: String,
                               st: PageRankDirectedState, newEdges: DataFrame,
                               srcCol: String, dstCol: String): DataFrame = {
+    val spark = vertices.sparkSession
     val base = st.scale * 3 / 20
-    refreshDirectedCore(vertices.sparkSession, st, newEdges, srcCol, dstCol) match {
-      case Left(unionView) =>
-        pageRankDirected(vertices, idCol, unionView, "s", "d",
+    refreshDirectedCore(st, newEdges, srcCol, dstCol) match {
+      case Left(novel) =>
+        pageRankDirected(vertices, idCol,
+          st.edgesBySrc.union(edgeRelation(spark, novel)), "s", "d",
           st.iterations, st.scale)
       case Right(c) =>
         // splice: recomputed ball ranks over stored finals outside the
         // ball; `merged` is corpus-sized — never broadcast it (the
         // round-10 lattice lesson).
-        val merged = c.recs.last.select(col("node"), col("r"))
+        val merged = c.recs(spark).last.select(col("node"), col("r"))
           .union(st.ranks
             .select(col("node"), element_at(col("rs"), st.iterations).as("r"))
-            .join(broadcast(c.ball), Seq("node"), "left_anti"))
+            .join(broadcast(c.ball(spark)), Seq("node"), "left_anti"))
         vertices.select(col(idCol).cast("long").as("__v"))
           .join(merged, col("__v") === col("node"), "left")
           .select(col("__v").as("node"), coalesce(col("r"), lit(base)).as("pr"))
@@ -1705,32 +1923,46 @@ object Graph {
     * the union edge set, bitwise (GraphSpec). The growing-union edge
     * discipline of [[pageRankRefreshState]], applied to BOTH sorted
     * layouts; [[compactPageRankDirectedState]] is the periodic
-    * re-sort. */
+    * re-sort. A driver copy splices on the driver, re-emits the ranks
+    * without a shuffle, and is kept while the union has at most
+    * `localThreshold` edges. */
   def pageRankDirectedRefreshState(st: PageRankDirectedState,
                                    newEdges: DataFrame,
-                                   srcCol: String, dstCol: String): PageRankDirectedState = {
+                                   srcCol: String, dstCol: String,
+                                   localThreshold: Long = DefaultLocalThreshold)
+      : PageRankDirectedState = {
     val spark = st.ranks.sparkSession
-    refreshDirectedCore(spark, st, newEdges, srcCol, dstCol) match {
-      case Left(unionView) =>
-        pageRankDirectedState(unionView, "s", "d", st.iterations, st.scale)
+    refreshDirectedCore(st, newEdges, srcCol, dstCol) match {
+      case Left(novel) =>
+        pageRankDirectedState(st.edgesBySrc.union(edgeRelation(spark, novel)),
+          "s", "d", st.iterations, st.scale, localThreshold)
       case Right(c) =>
-        var ballRows = c.recs.last.select(col("node"), col("degree"))
-        for (i <- 1 to st.iterations)
-          ballRows = ballRows.join(
-            c.recs(i - 1).select(col("node"), col("r").as(s"__r$i")),
-            Seq("node"), "left")
-        val ballStored = st.ranks.select(col("node"), col("rs").as("__olds"))
-          .join(broadcast(c.ball), Seq("node"))
-        val ballRanks = ballRows
-          .join(ballStored, Seq("node"), "left")
-          .select(col("node"), col("degree"),
-            array((1 to st.iterations).map(i =>
-              coalesce(col(s"__r$i"), element_at(col("__olds"), i))): _*).as("rs"))
-        val untouched = st.ranks.join(broadcast(c.ball), Seq("node"), "left_anti")
-        PageRankDirectedState(
-          st.edgesBySrc.union(c.delta), st.edgesByDst.union(c.delta),
-          stageSorted(untouched.unionByName(ballRanks), "node"),
-          st.iterations, st.scale)
+        val delta = stage(edgeRelation(spark, c.novel))
+        val folded = st.local match {
+          case Some(g) =>
+            val grown = g.grow(c.novel, c.recRows)
+            st.copy(ranks = localRanks(spark, grown),
+              local = Some(grown).filter(_.edgeCount <= localThreshold))
+          case None =>
+            val recs = c.recs(spark)
+            val ball = c.ball(spark)
+            var ballRows = recs.last.select(col("node"), col("degree"))
+            for (i <- 1 to st.iterations)
+              ballRows = ballRows.join(
+                recs(i - 1).select(col("node"), col("r").as(s"__r$i")),
+                Seq("node"), "left")
+            val ballStored = st.ranks.select(col("node"), col("rs").as("__olds"))
+              .join(broadcast(ball), Seq("node"))
+            val ballRanks = ballRows
+              .join(ballStored, Seq("node"), "left")
+              .select(col("node"), col("degree"),
+                array((1 to st.iterations).map(i =>
+                  coalesce(col(s"__r$i"), element_at(col("__olds"), i))): _*).as("rs"))
+            val untouched = st.ranks.join(broadcast(ball), Seq("node"), "left_anti")
+            st.copy(ranks = stageSorted(untouched.unionByName(ballRanks), "node"))
+        }
+        folded.copy(edgesBySrc = st.edgesBySrc.union(delta),
+          edgesByDst = st.edgesByDst.union(delta))
     }
   }
 
@@ -1744,7 +1976,7 @@ object Graph {
       () => stageSorted(st.edgesBySrc, "s"),
       () => stageSorted(st.edgesByDst, "d"),
       () => stageSorted(st.ranks, "node")))
-    PageRankDirectedState(eS, eD, r, st.iterations, st.scale)
+    st.copy(edgesBySrc = eS, edgesByDst = eD, ranks = r)
   }
 
   /** Order-independent edge-set fingerprint: (row count, xor of per-edge

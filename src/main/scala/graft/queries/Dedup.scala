@@ -1069,13 +1069,16 @@ object Dedup {
     // graph (verdict gap #3 of r14): Graph.pageRankDirectedState holds
     // the per-iteration rank HISTORY over the seed edges (staged
     // src-sorted AND dst-sorted — directed rank reads IN-neighbors,
-    // which a src-sorted layout cannot prune); the doc_id % 29 = 0
-    // pages' edges arrive as one batch and
+    // which a src-sorted layout cannot prune). The seed graph is under
+    // Graph.DefaultLocalThreshold edges, so the build collects it once,
+    // iterates on the driver and keeps a driver copy of the graph and
+    // history; the doc_id % 29 = 0 pages' edges arrive as one batch and
     // Graph.pageRankDirectedRefresh re-iterates only the batch's
-    // monotone out-neighborhood ball against frozen iterates —
-    // bit-identical to the full recompute the oracle states (3
-    // unrolled leak-rule rounds over the union edge set). LEAK rule
-    // only: redistribution's global term has no ball to splice.
+    // monotone out-neighborhood ball against frozen iterates read from
+    // that copy (no probe job) — bit-identical to the full recompute
+    // the oracle states (3 unrolled leak-rule rounds over the union
+    // edge set). LEAK rule only: redistribution's global term has no
+    // ball to splice.
     Q("x_linkgraph_rank_incremental", (s, d) => {
       val docs = documents(s, d)
       def edgesOf(f: org.apache.spark.sql.DataFrame) =

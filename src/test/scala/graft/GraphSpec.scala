@@ -718,6 +718,88 @@ class GraphSpec extends SparkSpec {
     assert(rows(st2) == rows(st))
   }
 
+  private def directedRows(s: Graph.PageRankDirectedState) =
+    s.ranks.select(col("node"), col("degree"),
+      expr("array_join(transform(rs, x -> CAST(x AS STRING)), ',')"))
+      .as[(Long, Long, String)].collect().toSet
+
+  test("pageRankDirectedState: driver path ≡ distributed path, bitwise, through refresh and fold") {
+    val rnd = new scala.util.Random(31)
+    for (trial <- 1 to 2) {
+      val n = 40
+      // ids in [n, n + 10) are only ever dsts; duplicates and self-loops
+      // must drop on both paths.
+      val base = Seq.fill(70)((rnd.nextInt(n).toLong, rnd.nextInt(n + 10).toLong))
+      val seed = base ++ base.take(5) ++ Seq((3L, 3L), (7L, 7L))
+      val local = Graph.pageRankDirectedState(seed.toDF("a", "b"), "a", "b")
+      val dist = Graph.pageRankDirectedState(seed.toDF("a", "b"), "a", "b",
+        localThreshold = 0)
+      assert(local.local.nonEmpty && dist.local.isEmpty)
+      assert(directedRows(local) == directedRows(dist), s"trial $trial: state diverged")
+      // a brand-new source, a brand-new dst, a stored duplicate and a
+      // self-loop: a ball-sized batch, then the same grown past the
+      // dense handoff.
+      val newSrc = 200L + trial
+      val newDst = 300L + trial
+      val small = Seq((newSrc, rnd.nextInt(n).toLong), (rnd.nextInt(n).toLong, newDst),
+        seed.head, (5L, 5L))
+      val large = small ++ Seq.fill(40)((rnd.nextInt(n).toLong, rnd.nextInt(n + 10).toLong))
+      val vertices = ((0L until (n + 10).toLong) ++ Seq(newSrc, newDst, 999L)).toDF("doc_id")
+      for ((batch, name) <- Seq(small -> "small", large -> "large")) {
+        def refresh(st: Graph.PageRankDirectedState) =
+          Graph.pageRankDirectedRefresh(vertices, "doc_id", st,
+            batch.toDF("src", "dst"), "src", "dst").as[(Long, Long)].collect().toSet
+        assert(refresh(local) == refresh(dist), s"trial $trial $name: refresh diverged")
+        val foldedLocal = Graph.pageRankDirectedRefreshState(local,
+          batch.toDF("src", "dst"), "src", "dst")
+        val foldedDist = Graph.pageRankDirectedRefreshState(dist,
+          batch.toDF("src", "dst"), "src", "dst")
+        assert(foldedLocal.local.nonEmpty)
+        assert(directedRows(foldedLocal) == directedRows(foldedDist),
+          s"trial $trial $name: fold diverged")
+      }
+    }
+  }
+
+  test("pageRankDirectedState: threshold + 1 edges take the distributed path; a fold past it drops the copy") {
+    // 12 distinct loop-free edges, plus a duplicate and a self-loop.
+    val ring = (0L until 12L).map(i => (i, (i + 1) % 12))
+    val edges = (ring :+ ring.head :+ ((4L, 4L))).toDF("a", "b")
+    val held = Graph.pageRankDirectedState(edges, "a", "b", localThreshold = 12)
+    assert(held.local.map(_.edgeCount).contains(12))
+    assert(Graph.pageRankDirectedState(edges, "a", "b", localThreshold = 11).local.isEmpty)
+    val folded = Graph.pageRankDirectedRefreshState(held,
+      Seq((0L, 6L)).toDF("a", "b"), "a", "b", localThreshold = 12)
+    assert(folded.local.isEmpty)
+    val fresh = Graph.pageRankDirectedState((ring :+ ((0L, 6L))).toDF("a", "b"), "a", "b",
+      localThreshold = 0)
+    assert(directedRows(folded) == directedRows(fresh))
+  }
+
+  test("x_linkgraph_rank_incremental: the driver-held state pins its Spark jobs") {
+    val docs = graft.sources.Tables.documents(spark, sf("sf0.001"))
+    // build + collect of the registry query. The distributed state build
+    // and its probing refresh started 38 jobs on this spec.
+    val (out, jobs) = jobsDuring(
+      SparkEntry.queries("x_linkgraph_rank_incremental")(spark, sf("sf0.001")).collect())
+    assert(out.length == docs.count())
+    assert(jobs == 11, s"build + collect started $jobs Spark jobs")
+    // a refresh of a driver-held state starts no job beyond its batch
+    // collect (one scan, no shuffle); in localCheckpoint mode neither
+    // does a fold.
+    val st = Graph.pageRankDirectedState(
+      docs.select(col("doc_id").as("s"), expr("(doc_id * 3 + 1) % 512").as("d")), "s", "d")
+    assert(st.local.nonEmpty)
+    val batch = docs.filter(col("doc_id") % 29 === 0)
+      .select(col("doc_id").as("s"), expr("(doc_id * 5 + 2) % 512").as("d"))
+    val (_, refreshJobs) = jobsDuring(
+      Graph.pageRankDirectedRefresh(docs, "doc_id", st, batch, "s", "d"))
+    assert(refreshJobs == 1, s"refresh started $refreshJobs jobs")
+    val (_, foldJobs) = jobsDuring(
+      Graph.pageRankDirectedRefreshState(st, batch, "s", "d"))
+    assert(foldJobs == 1, s"fold started $foldJobs jobs")
+  }
+
   test("pageRankRefresh: empty batch returns stored ranks; no broadcast HINT on the corpus attach") {
     import spark.implicits._
     val vertices = (0L to 50L).toDF("doc_id")

@@ -124,4 +124,36 @@ class GraphStateLayoutSpec extends SparkSpec {
           "a probe is scanning the full state instead of pruning")
     }
   }
+
+  test("a driver-built directed state stages range-disjoint files, one per shuffle partition") {
+    withSortedStaging(shards = 32) {
+      val dir = spark.conf.get("graft.stage.dir")
+      val n = 4000
+      val st = Graph.pageRankDirectedState(
+        ringGraph(n, chords = 800, seed = 5).toDF("a", "b"), "a", "b")
+      assert(st.local.nonEmpty)
+      val rnd = new scala.util.Random(13)
+      val ids = Seq.fill(5)(rnd.nextInt(n).toLong).distinct
+      for ((rel, key) <- Seq(st.edgesBySrc -> "s", st.edgesByDst -> "d", st.ranks -> "node")) {
+        // each file's key span, in key order: one file per shuffle
+        // partition, and no key in two files.
+        val spans = rel.groupBy(input_file_name()).agg(min(col(key)), max(col(key)))
+          .as[(String, Long, Long)].collect().sortBy(_._2)
+        assert(spans.length == 32, s"$key: ${spans.length} files")
+        spans.sliding(2).foreach { case Array(a, b) =>
+          assert(a._3 < b._2, s"$key: files overlap: $a $b")
+        }
+        val total = rel.count()
+        val read = rowsReadByScan(rel.filter(col(key).isInCollection(ids)))
+        assert(read <= total / 2,
+          s"$key probe materialized $read of $total rows — the files did not prune")
+      }
+      // the build leaves no stage_ dir behind but the state's own three.
+      val stageDirs = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("stage_")).map(_.getCanonicalPath).toSet
+      val stateDirs = Seq(st.edgesBySrc, st.edgesByDst, st.ranks).map(r =>
+        new java.io.File(new java.net.URI(r.inputFiles.head)).getParentFile.getCanonicalPath).toSet
+      assert(stageDirs == stateDirs)
+    }
+  }
 }

@@ -9,6 +9,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Spark jobs started while `body` runs: a listener counts job starts
+    * between two sentinel jobs (the listener bus delivers in order, so
+    * every job `body` started, on any thread, lands between them). */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tag = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val open = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.job.description")) match {
+          case Some(d) if d == s"$tag-open" => open.set(true)
+          case Some(d) if d == s"$tag-close" => open.set(false); closed.countDown()
+          case _ => if (open.get()) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    def sentinel(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel(s"$tag-open")
+      val out = body
+      sentinel(s"$tag-close")
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
