@@ -1504,8 +1504,8 @@ object Graph {
     * cannot prune). The doubled layout is the honest price of pruned
     * directed refreshes; compaction re-sorts both sides.
     *
-    * `local` is the DRIVER COPY of a bounded state: when the distinct
-    * edge set has at most `localThreshold` edges
+    * `local` is the DRIVER COPY of a bounded state: when the edge list
+    * has at most `localThreshold` loop-free rows
     * ([[DefaultLocalThreshold]], the [[connectedComponents]] bound), the
     * build runs the iterations on the driver and keeps the graph and its
     * history as primitive arrays ([[DirectedLocal]]: two ints per edge,
@@ -1513,9 +1513,11 @@ object Graph {
     * the default bound and 3 iterations). A refresh then answers every
     * lookup from the copy and starts no probe job; the staged relations
     * stay the state's durable form (compaction, the splice, callers'
-    * reads). Folds carry the copy forward while the union stays under
-    * the bound and drop it past it, so what the driver holds never
-    * exceeds the bound.
+    * reads). The copy remembers the bound it was built under
+    * ([[DirectedLocal]]`.bound`): folds carry it forward while the union
+    * stays under that bound and drop it past it, so what the driver
+    * holds never exceeds the bound; a state without a copy stays
+    * distributed through every fold.
     *
     * The LEAK dangling rule only ([[pageRankDirected]]'s default):
     * `redistributeDangling` breaks the refresh's locality theorem — a
@@ -1533,12 +1535,13 @@ object Graph {
     * `outDst(outOff(j) until outOff(j + 1))` and its in-neighbors
     * `inSrc(inOff(j) until inOff(j + 1))`, both as ascending node
     * indices; its out-degree is the out-range's length and
-    * `rs(j * iterations + i - 1)` its exact rank after iteration i. */
+    * `rs(j * iterations + i - 1)` its exact rank after iteration i.
+    * `bound` is the `localThreshold` the state was built under. */
   final class DirectedLocal private[operators] (
       val nodes: Array[Long],
       val outOff: Array[Int], val outDst: Array[Int],
       val inOff: Array[Int], val inSrc: Array[Int],
-      val rs: Array[Long], val iterations: Int) {
+      val rs: Array[Long], val iterations: Int, val bound: Long) {
     def edgeCount: Int = outDst.length
     private[operators] def indexOf(node: Long): Int =
       java.util.Arrays.binarySearch(nodes, node)
@@ -1558,7 +1561,7 @@ object Graph {
         src(e) = nodes(j); dst(e) = nodes(outDst(x)); e += 1
       }
       novel.foreach { case (s, d) => src(e) = s; dst(e) = d; e += 1 }
-      val g = directedCsr(src, dst, k)
+      val g = directedCsr(src, dst, k, bound)
       for (j <- g.nodes.indices) {
         val o = indexOf(g.nodes(j))
         if (o >= 0) System.arraycopy(rs, o * k, g.rs, j * k, k)
@@ -1569,7 +1572,8 @@ object Graph {
   }
 
   /** CSR layout of a distinct, loop-free edge list; history zeroed. */
-  private def directedCsr(src: Array[Long], dst: Array[Long], k: Int): DirectedLocal = {
+  private def directedCsr(src: Array[Long], dst: Array[Long], k: Int,
+                          bound: Long): DirectedLocal = {
     val ends = new Array[Long](src.length * 2)
     System.arraycopy(src, 0, ends, 0, src.length)
     System.arraycopy(dst, 0, ends, src.length, dst.length)
@@ -1593,7 +1597,7 @@ object Graph {
     val (outOff, outDst) = group(si, di)
     val (inOff, inSrc) = group(di, si)
     new DirectedLocal(nodes, outOff, outDst, inOff, inSrc,
-      new Array[Long](nodes.length * k), k)
+      new Array[Long](nodes.length * k), k, bound)
   }
 
   /** [[pageRankDirected]]'s k iterations on the driver, filling `g.rs`.
@@ -1674,11 +1678,14 @@ object Graph {
     * staging/overflow contract; history costs `iterations` extra
     * BIGINTs per edge-incident node, the layout one extra edge sort).
     *
-    * The distinct, loop-free edge set is collected once, up to
-    * `localThreshold + 1` edges. Within the bound the iterations run on
-    * the driver and the state keeps the driver copy
-    * ([[PageRankDirectedState]]); past it, or with `localThreshold = 0`,
-    * the distributed build runs. */
+    * The loop-free edge rows are collected once, up to
+    * `localThreshold + 1` of them, and deduplicated on the driver — a
+    * limit that stops early and starts no shuffle. Within the bound the
+    * iterations run on the driver and the state keeps the driver copy
+    * ([[PageRankDirectedState]]); past it (counting duplicate rows, so a
+    * duplicate-heavy edge list can take the distributed path with a
+    * distinct set under the bound), or with `localThreshold = 0`, the
+    * distributed build runs. */
   def pageRankDirectedState(edges: DataFrame, srcCol: String, dstCol: String,
                             iterations: Int = 3,
                             scale: Long = 1000000000L,
@@ -1689,16 +1696,16 @@ object Graph {
     val e = edges
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
       .filter(col("s") =!= col("d"))
-      .distinct()
     if (localThreshold > 0) {
       val rows = e.limit(math.min(localThreshold, Int.MaxValue - 1L).toInt + 1).collect()
       if (rows.length <= localThreshold) {
-        val g = directedCsr(rows.map(_.getLong(0)), rows.map(_.getLong(1)), iterations)
+        val pairs = rows.map(r => (r.getLong(0), r.getLong(1))).distinct
+        val g = directedCsr(pairs.map(_._1), pairs.map(_._2), iterations, localThreshold)
         iterateLocal(g, scale)
         return localDirectedState(e.sparkSession, g, scale)
       }
     }
-    val eS = stageSorted(e, "s")
+    val eS = stageSorted(e.distinct(), "s")
     // the d-sorted layout and the rank-history build both read ONLY the
     // staged eS — independent branches, so the d-sort's shuffle+sort job
     // overlaps the whole iteration chain instead of running before it
@@ -1924,25 +1931,26 @@ object Graph {
     * discipline of [[pageRankRefreshState]], applied to BOTH sorted
     * layouts; [[compactPageRankDirectedState]] is the periodic
     * re-sort. A driver copy splices on the driver, re-emits the ranks
-    * without a shuffle, and is kept while the union has at most
-    * `localThreshold` edges. */
+    * without a shuffle, and is kept while the union has at most the
+    * `localThreshold` the state was built under; the dense handoff
+    * rebuilds under that same bound, or distributed when the state
+    * holds no copy. */
   def pageRankDirectedRefreshState(st: PageRankDirectedState,
                                    newEdges: DataFrame,
-                                   srcCol: String, dstCol: String,
-                                   localThreshold: Long = DefaultLocalThreshold)
+                                   srcCol: String, dstCol: String)
       : PageRankDirectedState = {
     val spark = st.ranks.sparkSession
     refreshDirectedCore(st, newEdges, srcCol, dstCol) match {
       case Left(novel) =>
         pageRankDirectedState(st.edgesBySrc.union(edgeRelation(spark, novel)),
-          "s", "d", st.iterations, st.scale, localThreshold)
+          "s", "d", st.iterations, st.scale, st.local.fold(0L)(_.bound))
       case Right(c) =>
         val delta = stage(edgeRelation(spark, c.novel))
         val folded = st.local match {
           case Some(g) =>
             val grown = g.grow(c.novel, c.recRows)
             st.copy(ranks = localRanks(spark, grown),
-              local = Some(grown).filter(_.edgeCount <= localThreshold))
+              local = Some(grown).filter(g => g.edgeCount <= g.bound))
           case None =>
             val recs = c.recs(spark)
             val ball = c.ball(spark)

@@ -731,21 +731,25 @@ class GraphSpec extends SparkSpec {
       // must drop on both paths.
       val base = Seq.fill(70)((rnd.nextInt(n).toLong, rnd.nextInt(n + 10).toLong))
       val seed = base ++ base.take(5) ++ Seq((3L, 3L), (7L, 7L))
-      val local = Graph.pageRankDirectedState(seed.toDF("a", "b"), "a", "b")
-      val dist = Graph.pageRankDirectedState(seed.toDF("a", "b"), "a", "b",
+      var local = Graph.pageRankDirectedState(seed.toDF("a", "b"), "a", "b")
+      var dist = Graph.pageRankDirectedState(seed.toDF("a", "b"), "a", "b",
         localThreshold = 0)
       assert(local.local.nonEmpty && dist.local.isEmpty)
       assert(directedRows(local) == directedRows(dist), s"trial $trial: state diverged")
       // a brand-new source, a brand-new dst, a stored duplicate and a
-      // self-loop: a ball-sized batch, then the same grown past the
-      // dense handoff.
+      // self-loop; then a ball-sized batch around those two nodes, whose
+      // stored edges now sit only in the first fold's staged delta; then
+      // a batch grown past the dense handoff. The folds chain, and the
+      // distributed side must stay distributed through all three.
       val newSrc = 200L + trial
       val newDst = 300L + trial
       val small = Seq((newSrc, rnd.nextInt(n).toLong), (rnd.nextInt(n).toLong, newDst),
         seed.head, (5L, 5L))
+      val chained = Seq((newSrc, newDst), (newDst, rnd.nextInt(n).toLong),
+        (rnd.nextInt(n).toLong, newSrc))
       val large = small ++ Seq.fill(40)((rnd.nextInt(n).toLong, rnd.nextInt(n + 10).toLong))
       val vertices = ((0L until (n + 10).toLong) ++ Seq(newSrc, newDst, 999L)).toDF("doc_id")
-      for ((batch, name) <- Seq(small -> "small", large -> "large")) {
+      for ((batch, name) <- Seq(small -> "small", chained -> "chained", large -> "large")) {
         def refresh(st: Graph.PageRankDirectedState) =
           Graph.pageRankDirectedRefresh(vertices, "doc_id", st,
             batch.toDF("src", "dst"), "src", "dst").as[(Long, Long)].collect().toSet
@@ -754,22 +758,28 @@ class GraphSpec extends SparkSpec {
           batch.toDF("src", "dst"), "src", "dst")
         val foldedDist = Graph.pageRankDirectedRefreshState(dist,
           batch.toDF("src", "dst"), "src", "dst")
-        assert(foldedLocal.local.nonEmpty)
+        assert(foldedLocal.local.nonEmpty && foldedDist.local.isEmpty)
         assert(directedRows(foldedLocal) == directedRows(foldedDist),
           s"trial $trial $name: fold diverged")
+        local = foldedLocal
+        dist = foldedDist
       }
     }
   }
 
   test("pageRankDirectedState: threshold + 1 edges take the distributed path; a fold past it drops the copy") {
-    // 12 distinct loop-free edges, plus a duplicate and a self-loop.
+    // 12 distinct loop-free edges; a self-loop drops before the bound counts.
     val ring = (0L until 12L).map(i => (i, (i + 1) % 12))
-    val edges = (ring :+ ring.head :+ ((4L, 4L))).toDF("a", "b")
-    val held = Graph.pageRankDirectedState(edges, "a", "b", localThreshold = 12)
+    val held = Graph.pageRankDirectedState((ring :+ ((4L, 4L))).toDF("a", "b"), "a", "b",
+      localThreshold = 12)
     assert(held.local.map(_.edgeCount).contains(12))
-    assert(Graph.pageRankDirectedState(edges, "a", "b", localThreshold = 11).local.isEmpty)
+    // 13 loop-free rows — a 13th edge, or a duplicate — exceed the bound.
+    for (extra <- Seq((0L, 6L), ring.head))
+      assert(Graph.pageRankDirectedState((ring :+ extra).toDF("a", "b"), "a", "b",
+        localThreshold = 12).local.isEmpty)
+    // the fold keeps the bound the state was built under.
     val folded = Graph.pageRankDirectedRefreshState(held,
-      Seq((0L, 6L)).toDF("a", "b"), "a", "b", localThreshold = 12)
+      Seq((0L, 6L)).toDF("a", "b"), "a", "b")
     assert(folded.local.isEmpty)
     val fresh = Graph.pageRankDirectedState((ring :+ ((0L, 6L))).toDF("a", "b"), "a", "b",
       localThreshold = 0)
