@@ -5,13 +5,16 @@ Runs after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
 for every query result parquet in <outDir>, executes the corresponding
 oracle SQL from oracle_sql.json in DuckDB over the same sf tables and
 compares exactly (columns sorted by name, rows as multisets, bitwise on
-floats). Usage:
+floats). An oracle key with no result dir (Verify writes none for a key
+that failed) is reported MISSING and counts as a failure. Usage:
     python3 scripts/check.py /root/testdata/sf0.01 /tmp/verify_out
+    python3 scripts/check.py --self-test
 """
 import json
 import math
 import os
 import sys
+import tempfile
 
 import duckdb
 
@@ -35,7 +38,8 @@ def rows_key(cols, rows):
     return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
-def main(sf_dir, out_dir):
+def check(sf_dir, out_dir):
+    """{key: result} for every result dir and every oracle key."""
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -68,7 +72,14 @@ def main(sf_dir, out_dir):
             results[name] = f"VALUE_MISMATCH at sorted-row {diff[0]}:\n  spark={diff[1]}\n  duck ={diff[2]}"
         else:
             results[name] = f"OK ({len(got_rows)} rows)"
+    for name in oracles:
+        if name not in results:
+            results[name] = "MISSING (no result dir: the key failed in Verify)"
+    return results
 
+
+def report(results):
+    """Print one line per key and the pass count; return the failures."""
     bad = 0
     for name, res in sorted(results.items()):
         flag = "PASS" if res.startswith(("OK", "ROWS_ONLY")) else "FAIL"
@@ -76,8 +87,45 @@ def main(sf_dir, out_dir):
             bad += 1
         print(f"[{flag}] {name}: {res}")
     print(f"\n{len(results) - bad}/{len(results)} pass")
-    sys.exit(1 if bad else 0)
+    return bad
+
+
+def self_test():
+    """A key with an oracle but no result dir must fail the run."""
+    with tempfile.TemporaryDirectory() as tmp:
+        sf_dir, out_dir = os.path.join(tmp, "sf"), os.path.join(tmp, "out")
+        os.makedirs(sf_dir)
+        con = duckdb.connect()
+        for t in TABLES:
+            con.sql(f"COPY (SELECT 1 AS x) TO '{sf_dir}/{t}.parquet' (FORMAT PARQUET)")
+
+        def result(name, sql):
+            os.makedirs(os.path.join(out_dir, name))
+            con.sql(f"COPY ({sql}) TO '{out_dir}/{name}/part-0.parquet' (FORMAT PARQUET)")
+
+        result("ok", "SELECT 2.5 AS v")
+        result("wrong", "SELECT 3.5 AS v")
+        result("rows_only", "SELECT 1 AS v")
+        with open(os.path.join(out_dir, "oracle_sql.json"), "w") as f:
+            json.dump({"ok": "SELECT 2.5 AS v", "wrong": "SELECT 2.5 AS v",
+                       "failed": "SELECT 1 AS v"}, f)
+        results = check(sf_dir, out_dir)
+        assert results["ok"].startswith("OK"), results
+        assert results["wrong"].startswith("VALUE_MISMATCH"), results
+        assert results["rows_only"].startswith("ROWS_ONLY"), results
+        assert results["failed"].startswith("MISSING"), results
+        assert report(results) == 2, results
+    print("check self-test: ok")
+
+
+def main():
+    if sys.argv[1:] == ["--self-test"]:
+        self_test()
+        return
+    if len(sys.argv) != 3:
+        raise SystemExit(__doc__)
+    sys.exit(1 if report(check(sys.argv[1], sys.argv[2])) else 0)
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    main()

@@ -33,13 +33,20 @@ object Verify {
       "org.apache.spark.scheduler.DAGScheduler",
       org.apache.logging.log4j.Level.OFF)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val attempted = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val fs = new org.apache.hadoop.fs.Path(outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    attempted.foreach { case (name, fn) =>
+      // a failed key leaves NO result dir, so check.py reports it MISSING:
+      // neither a stale dir from an earlier run into the same out dir nor
+      // a failed write's leftovers may be compared as if fresh.
+      val dir = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      fs.delete(dir, true)
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir.toString)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        fs.delete(dir, true)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -54,7 +61,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // only the attempted keys' oracles: check.py counts an oracle key
+    // without a result dir as a failure.
+    val json = SparkEntry.oracleSql.filter { case (k, _) => attempted.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -647,17 +647,7 @@ object Graph {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
     require(scale % 20 == 0, s"scale=$scale must be divisible by 20")
     val base = scale * 3 / 20
-    // symmetrize by exploding both orientations out of ONE pass over the
-    // (possibly expensive) edge subplan — a union of two selects would
-    // evaluate it twice inside the staging job.
-    val e = stage(edges
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(explode(array(
-        struct(col("a").as("s"), col("b").as("d")),
-        struct(col("b").as("s"), col("a").as("d")))).as("e"))
-      .select(col("e.s").as("s"), col("e.d").as("d"))
-      .distinct())
+    val e = stage(symmetrized(edges, srcCol, dstCol).distinct())
     val deg = stage(e.groupBy(col("s").as("node"))
       .agg(count(lit(1)).as("degree"))
       .select(col("node"), col("degree")))
@@ -675,6 +665,20 @@ object Graph {
         col("__v") === col("node"), "left")
       .select(col("__v").as("node"), coalesce(col("r"), lit(base)).as("pr"))
   }
+
+  /** An undirected edge list as directed rows `(s, d)`: ids cast to
+    * long, self-loops dropped, each edge in both orientations (duplicates
+    * kept). Both orientations explode out of ONE pass over the (possibly
+    * expensive) edge subplan — a union of two selects would evaluate it
+    * twice inside a staging job. */
+  private def symmetrized(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(explode(array(
+        struct(col("a").as("s"), col("b").as("d")),
+        struct(col("b").as("s"), col("a").as("d")))).as("e"))
+      .select(col("e.s").as("s"), col("e.d").as("d"))
 
   /** DIRECTED PageRank over a hyperlink edge list (Brin & Page 1998)
     * — the web-centrality form of [[pageRank]]: mass flows ALONG edges
@@ -1117,14 +1121,7 @@ object Graph {
             .otherwise(lit(0L))).as("pr"))
   }
 
-  /** Reusable [[pageRank]] state for [[pageRankRefresh]]: the staged
-    * symmetric edge relation and the staged per-node ITERATE HISTORY
-    * `ranks` = (node, degree, rs) with `rs[i]` (1-based) the exact rank
-    * after iteration i — fixed-iteration PageRank makes r_k(v) a function
-    * of v's k-hop in-neighborhood only, so a refresh can splice stored
-    * iterates for every node outside the batch's k-hop ball. */
-  final case class PageRankState(edges: DataFrame, ranks: DataFrame,
-                                 iterations: Int, scale: Long)
+  // ------------------------- incremental PageRank
 
   /** Stage a relation RANGE-SORTED on `key`: each staged file covers a
     * disjoint key range, so a refresh probe's pushed `In`/range filter
@@ -1148,39 +1145,19 @@ object Graph {
   }
 
   /** Run [[pageRank]]'s exact loop once, keeping every iterate — the
-    * build-once step of the incremental-refresh pair (same staging and
-    * overflow contract as [[pageRank]]; history costs `iterations` extra
-    * BIGINTs per edge-incident node). */
+    * build-once step of the undirected incremental pair
+    * ([[pageRankRefresh]], [[pageRankRefreshState]]). Undirected
+    * PageRank IS directed PageRank over the symmetrized, distinct,
+    * loop-free edge set: there every node's out-degree is its degree
+    * (≥ 1), so the node set, the degrees and the exact integer
+    * arithmetic are [[pageRank]]'s, and the state is
+    * [[pageRankDirectedState]] over the symmetrized edges, bit for bit
+    * (GraphSpec). `ranks` = (node, degree, rs) with `rs[i]` (1-based) the
+    * exact rank after iteration i. The driver copy's bound counts
+    * symmetrized rows, two per undirected edge. */
   def pageRankState(edges: DataFrame, srcCol: String, dstCol: String,
-                    iterations: Int = 3, scale: Long = 1000000000L): PageRankState = {
-    require(iterations >= 1, s"iterations=$iterations must be >= 1")
-    require(scale % 20 == 0, s"scale=$scale must be divisible by 20")
-    val base = scale * 3 / 20
-    val e = stageSorted(edges
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(explode(array(
-        struct(col("a").as("s"), col("b").as("d")),
-        struct(col("b").as("s"), col("a").as("d")))).as("e"))
-      .select(col("e.s").as("s"), col("e.d").as("d"))
-      .distinct(), "s")
-    val deg = e.groupBy(col("s").as("node")).agg(count(lit(1)).as("degree"))
-    var nr = deg.select(col("node"), col("degree"), lit(scale).as("r"),
-      array().cast("array<long>").as("rs"))
-    for (_ <- 1 to iterations) {
-      val contrib = e.join(nr.select(col("node"), col("degree"), col("r")),
-          col("s") === col("node"))
-        .select(col("d"), expr("(r * 17L) div (20L * degree)").as("c"))
-      val in = contrib.groupBy(col("d")).agg(sum(col("c")).as("cin"))
-      nr = nr.join(in, col("node") === col("d"), "left")
-        .select(col("node"), col("degree"),
-          (lit(base) + coalesce(col("cin"), lit(0L))).as("r"),
-          concat(col("rs"),
-            array(lit(base) + coalesce(col("cin"), lit(0L)))).as("rs"))
-    }
-    PageRankState(e, stageSorted(nr.select(col("node"), col("degree"), col("rs")), "node"),
-      iterations, scale)
-  }
+                    iterations: Int = 3, scale: Long = 1000000000L): PageRankDirectedState =
+    pageRankDirectedState(symmetrized(edges, srcCol, dstCol), "s", "d", iterations, scale)
 
   /** Compress a sorted-or-not id set into at most `maxRanges` inclusive
     * [lo, hi] ranges by closing the smallest inter-id gaps first —
@@ -1206,9 +1183,20 @@ object Graph {
   }
 
   /** Point-set probe on a range-sorted state relation, zone-map-aligned
-    * and stack-safe: a bounded disjunction of [[compressRanges]] spans
-    * pushes to parquet, and the exact membership filter evaluates
-    * post-scan (see the probe-shape note in `refreshCore`). */
+    * and stack-safe. The refresh's ball is driver-materialized, so its id
+    * sets re-enter every probe as a pushed FILTER: round 10's
+    * broadcast-join probes scanned the full staged edge and history
+    * relations 4× per iteration and staged the frontier each round (the
+    * measured refresh wall, README §incremental upkeep), while a pushed
+    * point-set filter reads only the row groups whose zone maps cover
+    * ball ids. The pushed shape: a bounded DISJUNCTION of
+    * [[compressRanges]] spans reaches parquet (Or-trees of Betweens push
+    * precisely at any ball size — a many-value In either overflows the
+    * reader's recursive or-chain past ~1k values or degrades to ONE
+    * min/max span, which a single far-flung ball id widens to the whole
+    * key space: the 10M-lattice batch's wrap neighbor did exactly that),
+    * AND the exact membership filter evaluates post-scan (InSet — hash
+    * set, no recursion). */
   private def inIds(c: org.apache.spark.sql.Column, ids: Seq[Long]): org.apache.spark.sql.Column =
     if (ids.isEmpty) lit(false)
     else {
@@ -1225,284 +1213,41 @@ object Graph {
     * sf0.1 pair-graph batch, avg degree 66, whose B_1 IS the graph). */
   val RefreshDenseFraction: Double = 0.5
 
-  /** The shared re-iteration core of [[pageRankRefresh]] and
-    * [[pageRankRefreshState]]: the staged novel-edge delta, the settled
-    * B_0 degree relation, the per-iteration recomputed (node, degree, r)
-    * relations (rec(i-1) covers B_i), and the final ball B_k. Returned
-    * as Left(unionEdgeView) when the one-hop ball is DENSE
-    * ([[RefreshDenseFraction]]) — callers fall back to the full
-    * recompute over that view. */
-  private final case class RefreshCore(delta: DataFrame, a0Deg: DataFrame,
-                                       recs: Vector[DataFrame], ball: DataFrame)
-
-  private def refreshCore(spark: org.apache.spark.sql.SparkSession,
-                          st: PageRankState, newEdges: DataFrame,
-                          srcCol: String, dstCol: String): Either[DataFrame, RefreshCore] = {
-    val k = st.iterations
-    val scale = st.scale
-    val base = scale * 3 / 20
-    // NOVELTY SETTLES DRIVER-SIDE: the batch is by contract tiny, so its
-    // symmetrized pairs collect, and existing duplicates are looked up
-    // via a PRUNED probe of the sorted edge state (incident edges of the
-    // batch endpoints — ball-sized). Round 10 anti-joined the batch
-    // against the FULL edge relation instead, and that SMJ sorted all
-    // 20M stored rows at the 10M-edge lattice — most of the refresh wall
-    // after the other probes were pruned.
-    // the dense-handoff gate's stored-node count depends on nothing
-    // batch-side — start it NOW so it overlaps the settle probes
-    // (guide §2.6).
-    val ranksCount = graft.sources.Tables.defer(() => st.ranks.count())
-    val batchPairs = newEdges
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(explode(array(
-        struct(col("a").as("s"), col("b").as("d")),
-        struct(col("b").as("s"), col("a").as("d")))).as("e"))
-      .select(col("e.s").as("s"), col("e.d").as("d"))
-      .distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val existing = st.edges
-      .filter(inIds(col("s"), batchPairs.map(_._1).distinct))
-      .select(col("s"), col("d"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val novel = batchPairs.filterNot(existing)
-    // the delta persists as a TINY staged relation (the growing-union
-    // edge pattern: the state's edge relation is the sorted base plus
-    // one small staged delta per fold — compactPageRankState re-sorts).
-    val delta = stage(spark.createDataset(novel)(
-      org.apache.spark.sql.Encoders.product[(Long, Long)]).toDF("s", "d"))
-    val allE = st.edges.union(delta)
-    // THE BALL IS DRIVER-MATERIALIZED: the refresh is the small-batch
-    // plan (the operator contract since round 10 — hub-touching batches
-    // whose ball approaches the subgraph should run full pageRank), so
-    // frontier/boundary id sets collect to the driver and re-enter every
-    // probe as a pushed `In` FILTER on the range-sorted state relations.
-    // Round-10's broadcast-join probes scanned the full staged edge and
-    // history relations 4× per iteration and STAGED the frontier each
-    // round — the measured refresh wall (README §incremental upkeep).
-    // A pushed point-set filter reads only the row groups whose zone
-    // maps cover ball ids; the rest of the arithmetic is unchanged, so
-    // refresh ≡ full recompute stays bitwise (GraphSpec).
-    // The pushed probe shape: a bounded DISJUNCTION of compressed id
-    // ranges reaches parquet (Or-trees of Betweens push precisely at any
-    // ball size — a many-value In either overflows the reader's
-    // recursive or-chain past ~1k values or degrades to ONE min/max
-    // span, which a single far-flung ball id widens to the whole key
-    // space: the 10M-lattice batch's wrap neighbor did exactly that),
-    // AND the exact membership filter evaluates post-scan (InSet — hash
-    // set, no recursion).
-    def neighborsOf(ids: Seq[Long]): Seq[Long] =
-      allE.filter(inIds(col("s"), ids)).select(col("d"))
-        .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    // B_0 with NEW degrees: stored degree (0 for brand-new nodes) + batch
-    // incidence — settled once, driver-local (≤ 2|batch| rows by
-    // contract, fanned into every iteration below; `novel` is already
-    // driver-side, so the increment needs no job at all).
-    val dIncRows = novel.groupBy(_._1).view.mapValues(_.size.toLong).toSeq
-      .map { case (n, di) => (n, di) }.sortBy(_._1)
-    val b0Ids = dIncRows.map(_._1)
-    // stored degrees of the batch endpoints come free from the settle
-    // probe: `existing` holds EVERY stored edge out of each endpoint.
-    val storedDeg = existing.toSeq.groupBy(_._1).view
-      .mapValues(_.size.toLong).toMap
-    val a0Rows = dIncRows.map { case (n, di) =>
-      (n, storedDeg.getOrElse(n, 0L) + di) }
-    val a0Deg = spark.createDataset(a0Rows)(
-      org.apache.spark.sql.Encoders.product[(Long, Long)]).toDF("node", "degree")
-    val a0Map = a0Rows.toMap
-    val b0Set = b0Ids.toSet
-    // B_1 = union-graph neighbors of B_0 (⊇ B_0 — every batch endpoint
-    // has a symmetric delta edge back into B_0) — derivable from the
-    // settle probe's data with NO extra job: `existing` holds every
-    // stored edge out of the batch endpoints, `novel` the new ones.
-    var biIds: Seq[Long] =
-      (existing.toSeq.filter(e => b0Set(e._1)).map(_._2) ++ novel.map(_._2))
-        .distinct.sorted
-    // DENSE HANDOFF: parquet footers make the stored-node count a
-    // metadata read, and B_1 is already driver-side.
-    if (biIds.size > ranksCount() * RefreshDenseFraction)
-      return Left(allE)
-    // THE ITERATIONS RUN ON THE DRIVER: every in-flight relation is
-    // ball-sized by contract, so each iteration is exactly TWO pruned
-    // parquet probes (the ball's out-edges; the boundary's frozen
-    // history) and in-memory exact integer arithmetic — round 10's
-    // distributed formulation spent its wall on ~40 small
-    // driver-coordinated jobs (scheduling, not IO, after the probes
-    // were pruned). Scala `/` on non-negative longs ≡ SQL `div`, and
-    // long addition commutes, so the splice stays bit-identical to the
-    // distributed full recompute (GraphSpec).
-    // recMap: node -> (current degree, r_{i-1}) over B_{i-1}; r_0 = scale.
-    var recMap: Map[Long, (Long, Long)] =
-      a0Rows.map { case (n, dg) => n -> (dg, scale) }.toMap
-    var bPrevIds = b0Ids
-    var recMaps = Vector.empty[Seq[(Long, Long, Long)]]
-    for (i <- 1 to k) {
-      // ONE pruned probe: all out-edges of B_i. By symmetry their
-      // reverses are exactly the edges INTO B_i, their sources are
-      // neighbors(B_i) = B_{i+1}, and their per-node counts are the
-      // union-graph degrees of B_i — one scan serves all three.
-      val ballEdges = allE.filter(inIds(col("s"), biIds))
-        .select(col("s"), col("d"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val degCount = ballEdges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-      val nbIds = ballEdges.map(_._2).distinct.sorted.toSeq
-      // boundary sources: in-neighbors of B_i outside B_{i-1} (= recMap's
-      // cover) read frozen history (r_{i-1} = rs[i-1], r_0 = scale;
-      // degree unchanged — degree changes only inside B_0 ⊆ B_{i-1}).
-      val needOldIds = nbIds.filterNot(recMap.contains)
-      val oldRows = st.ranks.filter(inIds(col("node"), needOldIds))
-        .select(col("node"), col("degree"),
-          (if (i == 1) lit(scale) else element_at(col("rs"), i - 1)).as("r"))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val contrib = new scala.collection.mutable.HashMap[Long, Long]()
-      ballEdges.foreach { case (x, y) =>
-        val (dy, ry) = recMap.getOrElse(y, oldRows(y))
-        contrib.update(x, contrib.getOrElse(x, 0L) + (ry * 17L) / (20L * dy))
-      }
-      val next = biIds.map { x =>
-        (x, a0Map.getOrElse(x, degCount(x)), base + contrib.getOrElse(x, 0L))
-      }
-      recMaps = recMaps :+ next
-      recMap = next.map { case (n, dg, r) => n -> ((dg, r)) }.toMap
-      bPrevIds = biIds
-      biIds = nbIds
-    }
-    val recs = recMaps.map(rows => spark.createDataset(rows)(
-      org.apache.spark.sql.Encoders.product[(Long, Long, Long)])
-      .toDF("node", "degree", "r"))
-    val ball = spark.createDataset(bPrevIds.map(Tuple1(_)))(
-      org.apache.spark.sql.Encoders.product[Tuple1[Long]]).toDF("node")
-    Right(RefreshCore(delta, a0Deg, recs, ball))
-  }
-
-  /** INCREMENTAL PageRank refresh under a batch of new edges — re-iterate
-    * only the batch's expanding neighborhood against frozen stored
-    * iterates, landing on ranks BIT-IDENTICAL to a full recompute over
-    * the union edge set.
-    *
-    * Why exact: r_i(v) changes only if some in-neighbor u had a changed
-    * r_{i-1} or a changed degree, or the edge u→v is new. Degrees change
-    * only at batch endpoints (B_0); both endpoints of every new edge are
-    * in B_0; so with B_i = union-graph neighbors of B_{i-1} (monotone:
-    * B_0 ⊆ B_1 ⊆ …), every node OUTSIDE B_i keeps its stored r_i
-    * verbatim. The refresh recomputes r_i for B_i only, reading frozen
-    * history (`rs[i-1]`, stored degree) for boundary in-neighbors.
-    *
-    * Plan shape (the per-batch contract): the batch's ≤2|batch| endpoint
-    * degrees are settled once via one broadcast lookup and MATERIALIZED
-    * to a local relation (same by-contract-bounded collect as
-    * [[incrementalComponents]]); each iteration scans the staged union
-    * edges twice (frontier + in-edges, both against a broadcast frontier)
-    * and the staged rank history twice (boundary ranks + frontier
-    * degrees, both broadcast-probed) — every OTHER relation in flight is
-    * ball-sized (≤ |batch| × max-degree^i; for batches touching massive
-    * hubs the ball approaches the subgraph and a full [[pageRank]] is the
-    * better plan). The corpus-sized `vertices` is touched exactly once,
-    * by the final broadcast attach.
-    *
-    * Output: (node, pr) for EVERY vertex — the [[pageRank]] contract. */
-  def pageRankRefresh(vertices: DataFrame, idCol: String, st: PageRankState,
-                      newEdges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val base = st.scale * 3 / 20
-    refreshCore(vertices.sparkSession, st, newEdges, srcCol, dstCol) match {
-      case Left(unionView) =>
-        // dense ball: the full recompute IS the refresh (bit-identical by
-        // the refresh's own equivalence contract; re-symmetrizing the
-        // already-symmetric view is idempotent).
-        pageRank(vertices, idCol, unionView, "s", "d", st.iterations, st.scale)
-      case Right(c) =>
-        // splice: recomputed ball ranks over stored finals outside the ball.
-        // The BALL broadcasts (small by contract); `merged` is
-        // CORPUS-sized (every stored node rides through), so the final
-        // 1:1 node attach must NOT broadcast it — round 10 did, and at
-        // the 10M-edge lattice the 5M-row broadcast build was most of
-        // the refresh wall (the planner's shuffle join is the right
-        // plan for corpus × corpus on one key).
-        val merged = c.recs.last.select(col("node"), col("r"))
-          .union(st.ranks
-            .select(col("node"), element_at(col("rs"), st.iterations).as("r"))
-            .join(broadcast(c.ball), Seq("node"), "left_anti"))
-        vertices.select(col(idCol).cast("long").as("__v"))
-          .join(merged, col("__v") === col("node"), "left")
-          .select(col("__v").as("node"), coalesce(col("r"), lit(base)).as("pr"))
-    }
-  }
+  /** INCREMENTAL PageRank refresh under a batch of new edges — ranks
+    * BIT-IDENTICAL to a full [[pageRank]] over the union edge set:
+    * [[pageRankDirectedRefresh]] of the symmetrized batch against a
+    * [[pageRankState]] (a batch edge stored in either orientation settles
+    * as stored). Output: (node, pr) for EVERY vertex — the [[pageRank]]
+    * contract. */
+  def pageRankRefresh(vertices: DataFrame, idCol: String, st: PageRankDirectedState,
+                      newEdges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    pageRankDirectedRefresh(vertices, idCol, st, symmetrized(newEdges, srcCol, dstCol), "s", "d")
 
   /** [[pageRankRefresh]]'s FOLDING twin: fold the batch in and return the
-    * updated [[PageRankState]] (union edges + spliced per-iteration
-    * history), so refreshes CHAIN — the state a streaming graph gate
-    * advances every micro-batch ([[graft.streaming.GraphIngest]]).
-    * History splice: a ball node's rs'[i] is its recomputed r_i where the
-    * iteration touched it (rec(i) covers B_i ⊆ B_k; brand-new nodes are
-    * in every B_i) and its stored rs[i] otherwise; nodes outside the
-    * ball keep their rows verbatim. Equivalence (GraphSpec): chained
-    * folds ≡ [[pageRankState]] over the union edge set, bitwise. */
-  def pageRankRefreshState(st: PageRankState, newEdges: DataFrame,
-                           srcCol: String, dstCol: String): PageRankState = {
-    val spark = st.ranks.sparkSession
-    refreshCore(spark, st, newEdges, srcCol, dstCol) match {
-      case Left(unionView) =>
-        // dense ball: fold = rebuild the state whole over the union (the
-        // splice would rewrite everything anyway, with more bookkeeping).
-        pageRankState(unionView, "s", "d", st.iterations, st.scale)
-      case Right(c) =>
-        // ball rows rebuilt: rec(k-1) covers ALL of B_k with new degrees.
-        var ballRows = c.recs.last.select(col("node"), col("degree"))
-        for (i <- 1 to st.iterations)
-          ballRows = ballRows.join(
-            c.recs(i - 1).select(col("node"), col("r").as(s"__r$i")),
-            Seq("node"), "left")
-        val ballStored = st.ranks.select(col("node"), col("rs").as("__olds"))
-          .join(broadcast(c.ball), Seq("node"))
-        val ballRanks = ballRows
-          .join(ballStored, Seq("node"), "left")
-          .select(col("node"), col("degree"),
-            array((1 to st.iterations).map(i =>
-              coalesce(col(s"__r$i"), element_at(col("__olds"), i))): _*).as("rs"))
-        val untouched = st.ranks.join(broadcast(c.ball), Seq("node"), "left_anti")
-        // GROWING-UNION edge state: the sorted base plus one tiny staged
-        // delta per fold (probes prune the base; deltas are batch-sized
-        // scans) — the same append discipline as incrementalTriangles'
-        // caller-kept edges. A full re-sort per fold re-shuffled the
-        // whole edge relation for nothing; [[compactPageRankState]] is
-        // the periodic OPTIMIZE that re-sorts the accumulated unions.
-        // The ranks history IS rewritten (sorted) each fold — ball rows
-        // change in place, which an immutable staged layout can only
-        // express as a rewrite.
-        PageRankState(st.edges.union(c.delta),
-          stageSorted(untouched.unionByName(ballRanks), "node"),
-          st.iterations, st.scale)
-    }
-  }
-
-  /** Re-sort a [[PageRankState]] whose edge relation has accumulated
-    * per-fold delta unions ([[pageRankRefreshState]]) back into one
-    * range-sorted staged relation per side — the periodic OPTIMIZE of
-    * the chaining fold (run it every ~rotation, like
-    * [[graft.streaming.Gate.compactGrown]]). */
-  def compactPageRankState(st: PageRankState): PageRankState = {
-    // the two re-sorts read disjoint frozen relations — concurrent
-    // (guide §2.6).
-    val Seq(e, r) = graft.sources.Tables.inParallel(Seq(
-      () => stageSorted(st.edges, "s"),
-      () => stageSorted(st.ranks, "node")))
-    PageRankState(e, r, st.iterations, st.scale)
-  }
-
-  // ------------------------- incremental DIRECTED PageRank (link graph)
+    * updated state, so refreshes CHAIN — the state a streaming graph gate
+    * advances every micro-batch ([[graft.streaming.GraphIngest]]). It is
+    * [[pageRankDirectedRefreshState]] of the symmetrized batch. Chained
+    * folds ≡ [[pageRankState]] over the union edge set, bitwise
+    * (GraphSpec). */
+  def pageRankRefreshState(st: PageRankDirectedState, newEdges: DataFrame,
+                           srcCol: String, dstCol: String): PageRankDirectedState =
+    pageRankDirectedRefreshState(st, symmetrized(newEdges, srcCol, dstCol), "s", "d")
 
   /** Reusable [[pageRankDirected]] state for
     * [[pageRankDirectedRefresh]] — the rank maintenance a
     * self-maintaining hyperlink graph
-    * ([[graft.streaming.LinkGraphIngest]]) folds per batch. Same
-    * per-iteration history design as [[PageRankState]]
-    * (`ranks` = (node, degree, rs), rs[i] the exact rank after
-    * iteration i; degree = OUT-degree, 0 for dst-only nodes), with one
-    * structural difference: the edge relation stages TWICE — sorted by
-    * `s` (the out-expansion probes) AND by `d` (the in-edge probes:
-    * directed rank reads IN-neighbors, which a src-sorted layout
-    * cannot prune). The doubled layout is the honest price of pruned
-    * directed refreshes; compaction re-sorts both sides.
+    * ([[graft.streaming.LinkGraphIngest]]) folds per batch, and, over
+    * symmetrized edges, the undirected [[pageRankState]]. `ranks` is the
+    * staged per-node ITERATE HISTORY (node, degree, rs), rs[i] (1-based)
+    * the exact rank after iteration i and degree the OUT-degree (0 for
+    * dst-only nodes): fixed-iteration PageRank makes r_k(v) a function of
+    * v's k-hop in-neighborhood only, so a refresh can splice stored
+    * iterates for every node outside the batch's k-hop ball. The edge
+    * relation stages TWICE — sorted by `s` (the out-expansion probes) AND
+    * by `d` (the in-edge probes: directed rank reads IN-neighbors, which
+    * a src-sorted layout cannot prune). The doubled layout is the honest
+    * price of pruned directed refreshes (a symmetric state pays it too);
+    * compaction re-sorts both sides.
     *
     * `local` is the DRIVER COPY of a bounded state: when the edge list
     * has at most `localThreshold` loop-free rows
@@ -1811,25 +1556,30 @@ object Graph {
     spark.createDataset(pairs)(
       org.apache.spark.sql.Encoders.product[(Long, Long)]).toDF("s", "d")
 
-  /** The directed sibling of `refreshCore`. Exactness: r_i(v) changes
-    * only if some IN-neighbor u of v changed r_{i-1} or OUT-degree.
-    * Degrees change only at batch SOURCES (B_0); changed_1 = outN(B_0)
-    * and changed_{i+1} ⊆ outN(changed_i ∪ B_0), so with the MONOTONE
-    * ball B_1 = outN(B_0) ∪ B_0, B_{i+1} = outN(B_i) ∪ B_i, every node
-    * outside B_i keeps its stored r_i verbatim (recomputing a ball
-    * node an iteration didn't change lands on the same value — its
-    * inputs are all recomputed-correct or frozen-correct).
+  /** The re-iteration core of every PageRank refresh and fold.
+    * Exactness: r_i(v) changes only if some IN-neighbor u of v changed
+    * r_{i-1} or OUT-degree. Degrees change only at batch SOURCES (B_0);
+    * changed_1 = outN(B_0) and changed_{i+1} ⊆ outN(changed_i ∪ B_0), so
+    * with the MONOTONE ball B_1 = outN(B_0) ∪ B_0,
+    * B_{i+1} = outN(B_i) ∪ B_i, every node outside B_i keeps its stored
+    * r_i verbatim (recomputing a ball node an iteration didn't change
+    * lands on the same value — its inputs are all recomputed-correct or
+    * frozen-correct).
     *
     * The batch is tiny by contract: it collects once and dedupes on the
-    * driver. Per iteration the core reads the out-edges of B_i (degrees
-    * + the B_{i+1} expansion), the IN-edges of B_i (the contributions)
+    * driver, and its novelty settles against the stored out-edges of its
+    * sources (an anti-join against the full edge relation sorted all 20M
+    * stored rows at the 10M-edge lattice). Per iteration the core reads
+    * the out-edges of B_i (degrees + the B_{i+1} expansion), the IN-edges of B_i (the contributions)
     * and the frozen history of boundary in-neighbors, each as stored
     * state ([[DirectedLookups]]: the driver copy when the state holds
     * one, pruned parquet probes otherwise — two edge probes, since a
     * src-sorted layout cannot prune in-edges) plus the batch's novel
-    * edges. Iterations run on the driver (ball-sized by contract; Scala
-    * `/` on non-negative longs ≡ SQL `div`). Dense handoff as the
-    * undirected core ([[RefreshDenseFraction]]): Left(novel edges). */
+    * edges. Iterations run on the driver (ball-sized by contract — a
+    * distributed loop spent its wall on ~40 small driver-coordinated
+    * jobs; Scala `/` on non-negative longs ≡ SQL `div`). A ball past
+    * [[RefreshDenseFraction]] of the stored nodes hands off to the full
+    * recompute: Left(novel edges). */
   private def refreshDirectedCore(st: PageRankDirectedState, newEdges: DataFrame,
                                   srcCol: String, dstCol: String)
       : Either[Seq[(Long, Long)], DirRefreshCore] = {
@@ -1895,10 +1645,12 @@ object Graph {
     Right(DirRefreshCore(novel, recMaps))
   }
 
-  /** Incremental [[pageRankDirected]] under a batch of new edges —
-    * ranks bit-identical to a full recompute over the union edge set
-    * (the [[pageRankRefresh]] contract, directed). Output: (node, pr)
-    * for EVERY vertex. */
+  /** INCREMENTAL [[pageRankDirected]] under a batch of new edges — re-
+    * iterate only the batch's expanding neighborhood against frozen
+    * stored iterates, landing on ranks bit-identical to a full recompute
+    * over the union edge set. The corpus-sized `vertices` is touched
+    * exactly once, by the final attach. Output: (node, pr) for EVERY
+    * vertex. */
   def pageRankDirectedRefresh(vertices: DataFrame, idCol: String,
                               st: PageRankDirectedState, newEdges: DataFrame,
                               srcCol: String, dstCol: String): DataFrame = {
@@ -1927,10 +1679,10 @@ object Graph {
     * return the updated state so refreshes CHAIN per micro-batch —
     * the rank maintenance of [[graft.streaming.LinkGraphIngest]]'s
     * grown edge roots. Chained folds ≡ [[pageRankDirectedState]] over
-    * the union edge set, bitwise (GraphSpec). The growing-union edge
-    * discipline of [[pageRankRefreshState]], applied to BOTH sorted
-    * layouts; [[compactPageRankDirectedState]] is the periodic
-    * re-sort. A driver copy splices on the driver, re-emits the ranks
+    * the union edge set, bitwise (GraphSpec). History splice: a ball
+    * node's rs'[i] is its recomputed r_i where iteration i touched it and
+    * its stored rs[i] otherwise; nodes outside the ball keep their rows
+    * verbatim. A driver copy splices on the driver, re-emits the ranks
     * without a shuffle, and is kept while the union has at most the
     * `localThreshold` the state was built under; the dense handoff
     * rebuilds under that same bound, or distributed when the state
@@ -1945,6 +1697,13 @@ object Graph {
         pageRankDirectedState(st.edgesBySrc.union(edgeRelation(spark, novel)),
           "s", "d", st.iterations, st.scale, st.local.fold(0L)(_.bound))
       case Right(c) =>
+        // GROWING-UNION edge state: each sorted layout plus one tiny
+        // staged delta per fold (probes prune the base; deltas are
+        // batch-sized scans). A full re-sort per fold re-shuffled the
+        // whole edge relation for nothing; compactPageRankDirectedState
+        // is the periodic OPTIMIZE. The ranks ARE rewritten each fold:
+        // ball rows change in place, which an immutable staged layout
+        // can only express as a rewrite.
         val delta = stage(edgeRelation(spark, c.novel))
         val folded = st.local match {
           case Some(g) =>
@@ -1975,8 +1734,9 @@ object Graph {
   }
 
   /** Re-sort a [[PageRankDirectedState]] whose edge relations have
-    * accumulated per-fold deltas — the periodic OPTIMIZE of the
-    * directed chaining fold. */
+    * accumulated per-fold deltas back into one range-sorted staged
+    * relation per side — the periodic OPTIMIZE of the chaining fold (run
+    * it every ~rotation, like [[graft.streaming.Gate.compactGrown]]). */
   def compactPageRankDirectedState(st: PageRankDirectedState): PageRankDirectedState = {
     // three re-sorts over disjoint frozen relations — concurrent
     // (guide §2.6).

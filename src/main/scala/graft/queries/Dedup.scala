@@ -1126,12 +1126,14 @@ object Dedup {
 
     // ------------------------- incremental PageRank (per-batch refresh)
     // The per-batch twin of x_graph_pagerank: prior iterate HISTORY
-    // (Graph.pageRankState) is the persisted state; the odd-parity half
-    // of the pair graph folds in via Graph.pageRankRefresh — only the
-    // batch's 3-hop ball re-iterates, boundary nodes read frozen
-    // iterates, and the corpus attaches once by broadcast. Fixed-
-    // iteration PageRank makes the splice EXACT, so the oracle is the
-    // same full 3-iteration unrolled CTE over all pairs.
+    // (Graph.pageRankState — the directed state over the symmetrized
+    // pairs, built on the driver under DefaultLocalThreshold rows) is the
+    // persisted state; the odd-parity half of the pair graph folds in via
+    // Graph.pageRankRefresh. A ball-sized batch re-iterates only its
+    // 3-hop ball against frozen iterates; this batch touches most of the
+    // graph, so the refresh hands off to the full recompute over the
+    // union (RefreshDenseFraction). Either way the ranks are EXACT, so
+    // the oracle is the same full 3-iteration unrolled CTE over all pairs.
     Q("x_pagerank_incremental", (s, d) => {
       val pairs = stage(graft.operators.TextDedup
         .simhashPairs(fanOut(documents(s, d)), "doc_id", "text", maxHamming = 7))

@@ -148,9 +148,12 @@ object GraphIngest {
       Tables.Staged(spark.read.parquet(edgesPath), Some(edgesPath)),
       version, foldedBatch)
 
-  /** Evolving PageRank state: [[Graph.PageRankState]] (already staged by
-    * its builders) plus the fold version. */
-  final case class RankState(pr: Graph.PageRankState, version: Long,
+  /** Evolving PageRank state: the symmetric [[Graph.PageRankDirectedState]]
+    * of [[Graph.pageRankState]] (already staged by its builders; a graph
+    * under [[Graph.DefaultLocalThreshold]] symmetrized rows also keeps
+    * its driver copy, so a fold starts no probe job) plus the fold
+    * version. */
+  final case class RankState(pr: Graph.PageRankDirectedState, version: Long,
                              foldedBatch: Long = -1L)
     extends Gate.Folded
 

@@ -654,8 +654,10 @@ class GraphSpec extends SparkSpec {
       val n = 30
       val all = Seq.fill(80)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       val (prevRaw, batchRaw) = all.splitAt(60)
-      // overlap + a brand-new node only the batch knows about
-      val batch = batchRaw ++ prevRaw.take(5) :+ (100L, rnd.nextInt(n).toLong)
+      // overlap, stored edges reversed, and a brand-new node only the
+      // batch knows about
+      val batch = batchRaw ++ prevRaw.take(5) ++ prevRaw.take(5).map(_.swap) :+
+        (100L, rnd.nextInt(n).toLong)
       val vertices = ((0L until n.toLong) :+ 100L).toDF("doc_id")
       val st = Graph.pageRankState(prevRaw.toDF("a", "b"), "a", "b",
         iterations = 3, scale = 1000000000L)
@@ -667,6 +669,29 @@ class GraphSpec extends SparkSpec {
         iterations = 3, scale = 1000000000L)
         .as[(Long, Long)].collect().toSet
       assert(inc == full, s"trial $trial diverged")
+    }
+  }
+
+  test("pageRankState: stored history ≡ one-shot pageRank per iteration, on both paths") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(37)
+    for (trial <- 1 to 2) {
+      val n = 30
+      val raw = Seq.fill(60)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      // duplicates, both orientations of the same pair, and self-loops.
+      val edges = raw ++ raw.take(6) ++ raw.slice(6, 12).map(_.swap) ++ Seq((2L, 2L), (9L, 9L))
+      val symRows = edges.filter(e => e._1 != e._2).flatMap(e => Seq(e, e.swap))
+      val degree = symRows.distinct.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      val held = Graph.pageRankState(edges.toDF("a", "b"), "a", "b")
+      val dist = Graph.pageRankDirectedState(symRows.toDF("s", "d"), "s", "d",
+        localThreshold = 0)
+      assert(held.local.nonEmpty && dist.local.isEmpty)
+      val vertices = degree.keys.toSeq.toDF("doc_id")
+      val oneShot = (1 to 3).map(i => Graph.pageRank(vertices, "doc_id",
+        edges.toDF("a", "b"), "a", "b", iterations = i).as[(Long, Long)].collect().toMap)
+      val want = degree.keys.map(v => (v, degree(v), oneShot.map(_(v)).mkString(","))).toSet
+      for ((st, path) <- Seq(held -> "driver", dist -> "distributed"))
+        assert(directedRows(st) == want, s"trial $trial: $path history diverged")
     }
   }
 
@@ -808,6 +833,18 @@ class GraphSpec extends SparkSpec {
     val (_, foldJobs) = jobsDuring(
       Graph.pageRankDirectedRefreshState(st, batch, "s", "d"))
     assert(foldJobs == 1, s"fold started $foldJobs jobs")
+    // the undirected pair over the same toy graph holds a driver copy
+    // too, so it starts the same jobs. Its former separate state, which
+    // always probed parquet, started 11 jobs for this refresh and 20 for
+    // this fold.
+    val und = Graph.pageRankState(
+      docs.select(col("doc_id").as("s"), expr("(doc_id * 3 + 1) % 512").as("d")), "s", "d")
+    assert(und.local.nonEmpty)
+    val (_, undRefreshJobs) = jobsDuring(
+      Graph.pageRankRefresh(docs, "doc_id", und, batch, "s", "d"))
+    assert(undRefreshJobs == 1, s"undirected refresh started $undRefreshJobs jobs")
+    val (_, undFoldJobs) = jobsDuring(Graph.pageRankRefreshState(und, batch, "s", "d"))
+    assert(undFoldJobs == 1, s"undirected fold started $undFoldJobs jobs")
   }
 
   test("pageRankRefresh: empty batch returns stored ranks; no broadcast HINT on the corpus attach") {

@@ -62,8 +62,9 @@ class GraphStateLayoutSpec extends SparkSpec {
       val n = 30000
       val edges = ringGraph(n, chords = 2000, seed = 7).toDF("a", "b")
       val st = Graph.pageRankState(edges, "a", "b")
+      assert(st.local.nonEmpty)
       val nRanks = st.ranks.count()
-      val nEdges = st.edges.count()
+      val nEdges = st.edgesBySrc.count()
       assert(nRanks == n)
 
       // a refresh-shaped probe: ~20 scattered node ids.
@@ -75,7 +76,7 @@ class GraphStateLayoutSpec extends SparkSpec {
         s"ranks probe materialized $ranksRead of $nRanks rows — " +
           "the sorted layout did not prune (check inFilterThreshold)")
       val edgesRead = rowsReadByScan(
-        st.edges.filter(col("s").isInCollection(ball)))
+        st.edgesBySrc.filter(col("s").isInCollection(ball)))
       assert(edgesRead <= nEdges / 2,
         s"edges probe materialized $edgesRead of $nEdges rows — no pruning")
     }
@@ -90,38 +91,45 @@ class GraphStateLayoutSpec extends SparkSpec {
       // accounting below to have teeth.
       val (batch, base) = all.zipWithIndex.partition(_._2 % 9973 == 0)
       assert(batch.nonEmpty)
-      val st = Graph.pageRankState(base.map(_._1).toDF("a", "b"), "a", "b")
+      val baseEdges = base.map(_._1)
+      val held = Graph.pageRankState(baseEdges.toDF("a", "b"), "a", "b")
+      // the same state without a driver copy: the refresh runs its
+      // pruned parquet probes.
+      val probed = Graph.pageRankDirectedState(
+        baseEdges.flatMap(e => Seq(e, e.swap)).toDF("s", "d"), "s", "d", localThreshold = 0)
+      assert(held.local.nonEmpty && probed.local.isEmpty)
       val vertices = (0 until n).map(_.toLong).toDF("doc_id")
-      val nE = st.edges.count()
-      val nR = st.ranks.count()
+      for (st <- Seq(held, probed)) {
+        val nE = st.edgesBySrc.count()
+        val nR = st.ranks.count()
 
-      val rows = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            rows.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
+        val rows = new java.util.concurrent.atomic.AtomicLong()
+        val listener = new SparkListener {
+          override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+            if (te.taskMetrics != null)
+              rows.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
+        }
+        spark.sparkContext.addSparkListener(listener)
+        try {
+          val refreshed = Graph.pageRankRefresh(vertices, "doc_id", st,
+            batch.map(_._1).toDF("a", "b"), "a", "b")
+          assert(refreshed.count() == n)
+          // let the async listener bus drain before reading the counter.
+          Thread.sleep(1500)
+        } finally spark.sparkContext.removeSparkListener(listener)
+
+        // round-10's join-probe shape read ≥ 2|E| + 2|R| per iteration
+        // (k = 3 → ≥ 6|E| + 6|R|) on top of a sorted restage of the
+        // edges; the bound allows that restage's three full edge passes
+        // and one history splice, plus ball-sized probe slices. It fails
+        // if the probes degrade to full scans (round-10's shape reads
+        // ~2.5x this bound).
+        val read = rows.get()
+        val bound = (3.4 * nE + 1.3 * nR + n + 5000).toLong
+        assert(read <= bound,
+          s"refresh read $read parquet rows (|E|=$nE, |R|=$nR, bound=$bound, " +
+            s"driver copy=${st.local.nonEmpty}) — a probe is scanning the full state instead of pruning")
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val refreshed = Graph.pageRankRefresh(vertices, "doc_id", st,
-          batch.map(_._1).toDF("a", "b"), "a", "b")
-        assert(refreshed.count() == n)
-        // let the async listener bus drain before reading the counter.
-        Thread.sleep(1500)
-      } finally spark.sparkContext.removeSparkListener(listener)
-
-      // round-10's join-probe shape read ≥ 2|E| + 2|R| per iteration
-      // (k = 3 → ≥ 6|E| + 6|R|) on top of the restage; the pruned shape
-      // pays three inherent full edge passes (the delta anti-join, the
-      // range-partitioner SAMPLING pass of the sorted restage, the
-      // restage write itself) and one history splice, plus ball-sized
-      // probe slices. The bound fails if the probes degrade to full
-      // scans (round-10's shape reads ~2.5x this bound).
-      val read = rows.get()
-      val bound = (3.4 * nE + 1.3 * nR + n + 5000).toLong
-      assert(read <= bound,
-        s"refresh read $read parquet rows (|E|=$nE, |R|=$nR, bound=$bound) — " +
-          "a probe is scanning the full state instead of pruning")
     }
   }
 
