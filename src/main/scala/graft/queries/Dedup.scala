@@ -1130,9 +1130,9 @@ object Dedup {
     // pairs, built on the driver under DefaultLocalThreshold rows) is the
     // persisted state; the odd-parity half of the pair graph folds in via
     // Graph.pageRankRefresh. A ball-sized batch re-iterates only its
-    // 3-hop ball against frozen iterates; this batch touches most of the
-    // graph, so the refresh hands off to the full recompute over the
-    // union (RefreshDenseFraction). Either way the ranks are EXACT, so
+    // 3-hop ball against frozen iterates; at sf0.1 this batch touches
+    // most of the graph, so the refresh hands off to the full recompute
+    // over the union (RefreshDenseFraction). Either way the ranks are EXACT, so
     // the oracle is the same full 3-iteration unrolled CTE over all pairs.
     Q("x_pagerank_incremental", (s, d) => {
       val pairs = stage(graft.operators.TextDedup
