@@ -1256,24 +1256,60 @@ object Graph {
     * history as primitive arrays ([[DirectedLocal]]: two ints per edge,
     * two ints and 1 + `iterations` longs per node — at most 44 MiB at
     * the default bound and 3 iterations). A refresh then answers every
-    * lookup from the copy and starts no probe job; the staged relations
-    * stay the state's durable form (compaction, the splice, callers'
-    * reads). The copy remembers the bound it was built under
-    * ([[DirectedLocal]]`.bound`): folds carry it forward while the union
-    * stays under that bound and drop it past it, so what the driver
-    * holds never exceeds the bound; a state without a copy stays
-    * distributed through every fold.
+    * lookup from the copy, splices the final ranks on the driver and
+    * starts no probe job; a fold grows the copy on the driver. The copy
+    * remembers the bound it was built under ([[DirectedLocal]]`.bound`):
+    * folds carry it forward while the union stays under that bound and
+    * drop it past it, so what the driver holds never exceeds the bound;
+    * a state without a copy stays distributed through every fold.
+    *
+    * WHEN THE RELATIONS ARE BUILT: a state holding a copy builds each of
+    * its three relations from the copy and stages it (sorted,
+    * range-disjoint files) the first time something reads it —
+    * compaction, the distributed side of a caller, a gate's `onBatch`.
+    * A held state that nothing reads plans and stages nothing, so a
+    * build, refresh or fold chain on the driver leaves no staged
+    * relation behind. A state without a copy is strict: its relations
+    * are staged by the build or fold that made it. [[copy]] keeps each
+    * relation it is not given as it is, built or not.
     *
     * The LEAK dangling rule only ([[pageRankDirected]]'s default):
     * `redistributeDangling` breaks the refresh's locality theorem — a
     * global Σr term makes every rank depend on every dangling node, so
     * there is no ball to splice; the redistributing variant must
     * recompute (stated, not silently approximated). */
-  final case class PageRankDirectedState(edgesBySrc: DataFrame,
-                                         edgesByDst: DataFrame,
-                                         ranks: DataFrame,
-                                         iterations: Int, scale: Long,
-                                         local: Option[DirectedLocal] = None)
+  final class PageRankDirectedState private (
+      bySrc: () => DataFrame, byDst: () => DataFrame, history: () => DataFrame,
+      val iterations: Int, val scale: Long, val local: Option[DirectedLocal]) {
+    lazy val edgesBySrc: DataFrame = bySrc()
+    lazy val edgesByDst: DataFrame = byDst()
+    lazy val ranks: DataFrame = history()
+
+    def copy(edgesBySrc: => DataFrame = this.edgesBySrc,
+             edgesByDst: => DataFrame = this.edgesByDst,
+             ranks: => DataFrame = this.ranks,
+             iterations: Int = this.iterations, scale: Long = this.scale,
+             local: Option[DirectedLocal] = this.local): PageRankDirectedState =
+      new PageRankDirectedState(() => edgesBySrc, () => edgesByDst, () => ranks,
+        iterations, scale, local)
+  }
+
+  object PageRankDirectedState {
+    /** A strict state over relations already built. */
+    def apply(edgesBySrc: DataFrame, edgesByDst: DataFrame, ranks: DataFrame,
+              iterations: Int, scale: Long,
+              local: Option[DirectedLocal] = None): PageRankDirectedState =
+      new PageRankDirectedState(() => edgesBySrc, () => edgesByDst, () => ranks,
+        iterations, scale, local)
+
+    /** A state holding the driver copy `g`, whose relations are built
+      * from `g` when first read. */
+    private[operators] def held(spark: org.apache.spark.sql.SparkSession,
+                                g: DirectedLocal, scale: Long): PageRankDirectedState =
+      new PageRankDirectedState(() => localEdges(spark, g, bySrc = true),
+        () => localEdges(spark, g, bySrc = false), () => localRanks(spark, g),
+        g.iterations, scale, Some(g))
+  }
 
   /** The driver copy of a bounded [[PageRankDirectedState]]: `nodes` is
     * the sorted edge-incident node set; node `j`'s out-neighbors are
@@ -1299,6 +1335,25 @@ object Graph {
     private[operators] def grow(novel: Seq[(Long, Long)],
                                 recRows: Vector[Seq[(Long, Long, Long)]]): DirectedLocal = {
       val k = iterations
+      val g = plus(novel)
+      for (j <- g.nodes.indices) {
+        val o = indexOf(g.nodes(j))
+        if (o >= 0) System.arraycopy(rs, o * k, g.rs, j * k, k)
+      }
+      for (i <- 1 to k; (x, _, r) <- recRows(i - 1)) g.rs(g.indexOf(x) * k + i - 1) = r
+      g
+    }
+
+    /** The CSR of this graph's edges plus the `novel` ones (none stored
+      * here, none repeated), under the same bound; history zeroed. */
+    private[operators] def plus(novel: Seq[(Long, Long)]): DirectedLocal = {
+      val (src, dst) = edgesPlus(novel)
+      directedCsr(src, dst, iterations, bound)
+    }
+
+    /** This graph's edges, src-major, then the `novel` ones, as parallel
+      * src and dst arrays. */
+    private[operators] def edgesPlus(novel: Seq[(Long, Long)]): (Array[Long], Array[Long]) = {
       val src = new Array[Long](edgeCount + novel.size)
       val dst = new Array[Long](src.length)
       var e = 0
@@ -1306,13 +1361,18 @@ object Graph {
         src(e) = nodes(j); dst(e) = nodes(outDst(x)); e += 1
       }
       novel.foreach { case (s, d) => src(e) = s; dst(e) = d; e += 1 }
-      val g = directedCsr(src, dst, k, bound)
-      for (j <- g.nodes.indices) {
-        val o = indexOf(g.nodes(j))
-        if (o >= 0) System.arraycopy(rs, o * k, g.rs, j * k, k)
-      }
-      for (i <- 1 to k; (x, _, r) <- recRows(i - 1)) g.rs(g.indexOf(x) * k + i - 1) = r
-      g
+      (src, dst)
+    }
+
+    /** (node, r_k) for every node: the stored final ranks, overwritten
+      * by the `recomputed` (node, degree, r_k) rows, which may add
+      * nodes. */
+    private[operators] def finalRanks(recomputed: Seq[(Long, Long, Long)]): Seq[(Long, Long)] = {
+      val k = iterations
+      val fresh = recomputed.map(r => r._1 -> r._3).toMap
+      nodes.indices.map { j =>
+        (nodes(j), fresh.getOrElse(nodes(j), rs(j * k + k - 1)))
+      } ++ recomputed.collect { case (x, _, r) if indexOf(x) < 0 => (x, r) }
     }
   }
 
@@ -1392,21 +1452,17 @@ object Graph {
       .toDF(names: _*))
   }
 
-  /** A [[PageRankDirectedState]] holding the driver-built graph `g`: its
-    * three relations emitted from the copy, sorted, and staged
-    * concurrently. */
-  private def localDirectedState(spark: org.apache.spark.sql.SparkSession,
-                                 g: DirectedLocal, scale: Long): PageRankDirectedState = {
+  /** The (s, d) edge relation of a driver copy, sorted by `s`
+    * (`bySrc`) or by `d`, and staged. */
+  private def localEdges(spark: org.apache.spark.sql.SparkSession, g: DirectedLocal,
+                         bySrc: Boolean): DataFrame = {
     import spark.implicits._
-    val bySrc = for (j <- g.nodes.indices; e <- g.outOff(j) until g.outOff(j + 1))
-      yield (g.nodes(j), g.nodes(g.outDst(e)))
-    val byDst = for (j <- g.nodes.indices; e <- g.inOff(j) until g.inOff(j + 1))
-      yield (g.nodes(g.inSrc(e)), g.nodes(j))
-    val Seq(eS, eD, r) = graft.sources.Tables.inParallel(Seq(
-      () => stageSortedRows(spark, bySrc.toArray, (e: (Long, Long)) => e._1, "s", "d"),
-      () => stageSortedRows(spark, byDst.toArray, (e: (Long, Long)) => e._2, "s", "d"),
-      () => localRanks(spark, g)))
-    PageRankDirectedState(eS, eD, r, g.iterations, scale, Some(g))
+    if (bySrc)
+      stageSortedRows(spark, (for (j <- g.nodes.indices; e <- g.outOff(j) until g.outOff(j + 1))
+        yield (g.nodes(j), g.nodes(g.outDst(e)))).toArray, (e: (Long, Long)) => e._1, "s", "d")
+    else
+      stageSortedRows(spark, (for (j <- g.nodes.indices; e <- g.inOff(j) until g.inOff(j + 1))
+        yield (g.nodes(g.inSrc(e)), g.nodes(j))).toArray, (e: (Long, Long)) => e._2, "s", "d")
   }
 
   /** The (node, degree, rs) relation of a driver copy, sorted and staged. */
@@ -1417,6 +1473,21 @@ object Graph {
       g.nodes.indices.map(j => (g.nodes(j), g.degree(j), g.rs.slice(j * k, j * k + k))).toArray,
       (x: (Long, Long, Array[Long])) => x._1, "node", "degree", "rs")
   }
+
+  /** The state of the driver-built graph `g` with its history filled:
+    * held (relations built when read) while `g` is within its bound;
+    * past it, strict — its three relations emitted from `g` and staged
+    * concurrently — and without the copy. */
+  private def localDirectedState(spark: org.apache.spark.sql.SparkSession,
+                                 g: DirectedLocal, scale: Long): PageRankDirectedState =
+    if (g.edgeCount <= g.bound) PageRankDirectedState.held(spark, g, scale)
+    else {
+      val Seq(eS, eD, r) = graft.sources.Tables.inParallel(Seq(
+        () => localEdges(spark, g, bySrc = true),
+        () => localEdges(spark, g, bySrc = false),
+        () => localRanks(spark, g)))
+      PageRankDirectedState(eS, eD, r, g.iterations, scale)
+    }
 
   /** Run [[pageRankDirected]]'s exact loop once, keeping every iterate
     * — the build-once step of the directed incremental pair (same
@@ -1650,7 +1721,11 @@ object Graph {
     * stored iterates, landing on ranks bit-identical to a full recompute
     * over the union edge set. The corpus-sized `vertices` is touched
     * exactly once, by the final attach. Output: (node, pr) for EVERY
-    * vertex. */
+    * vertex. A state holding a driver copy is read from the copy alone:
+    * the ball's ranks overwrite the copy's finals on the driver and
+    * attach as a local relation, and the dense handoff recomputes over
+    * the copy's edges plus the novel ones, so none of its relations is
+    * built. */
   def pageRankDirectedRefresh(vertices: DataFrame, idCol: String,
                               st: PageRankDirectedState, newEdges: DataFrame,
                               srcCol: String, dstCol: String): DataFrame = {
@@ -1658,17 +1733,29 @@ object Graph {
     val base = st.scale * 3 / 20
     refreshDirectedCore(st, newEdges, srcCol, dstCol) match {
       case Left(novel) =>
-        pageRankDirected(vertices, idCol,
-          st.edgesBySrc.union(edgeRelation(spark, novel)), "s", "d",
-          st.iterations, st.scale)
+        val union = st.local match {
+          case Some(g) =>
+            val (src, dst) = g.edgesPlus(novel)
+            edgeRelation(spark, src.indices.map(i => (src(i), dst(i))))
+          case None => st.edgesBySrc.union(edgeRelation(spark, novel))
+        }
+        pageRankDirected(vertices, idCol, union, "s", "d", st.iterations, st.scale)
       case Right(c) =>
-        // splice: recomputed ball ranks over stored finals outside the
-        // ball; `merged` is corpus-sized — never broadcast it (the
-        // round-10 lattice lesson).
-        val merged = c.recs(spark).last.select(col("node"), col("r"))
-          .union(st.ranks
-            .select(col("node"), element_at(col("rs"), st.iterations).as("r"))
-            .join(broadcast(c.ball(spark)), Seq("node"), "left_anti"))
+        val merged = st.local match {
+          // every final rank is in the copy: splice on the driver.
+          case Some(g) =>
+            spark.createDataset(g.finalRanks(c.recRows.last))(
+              org.apache.spark.sql.Encoders.product[(Long, Long)]).toDF("node", "r")
+          // recomputed ball ranks over stored finals outside the ball.
+          case None =>
+            c.recs(spark).last.select(col("node"), col("r"))
+              .union(st.ranks
+                .select(col("node"), element_at(col("rs"), st.iterations).as("r"))
+                .join(broadcast(c.ball(spark)), Seq("node"), "left_anti"))
+        }
+        // `merged` is corpus-sized — never hint it for broadcast (the
+        // round-10 lattice lesson); the planner picks the join from its
+        // stats.
         vertices.select(col(idCol).cast("long").as("__v"))
           .join(merged, col("__v") === col("node"), "left")
           .select(col("__v").as("node"), coalesce(col("r"), lit(base)).as("pr"))
@@ -1682,21 +1769,30 @@ object Graph {
     * the union edge set, bitwise (GraphSpec). History splice: a ball
     * node's rs'[i] is its recomputed r_i where iteration i touched it and
     * its stored rs[i] otherwise; nodes outside the ball keep their rows
-    * verbatim. A driver copy splices on the driver, re-emits the ranks
-    * without a shuffle, and is kept while the union has at most the
-    * `localThreshold` the state was built under; the dense handoff
-    * rebuilds under that same bound, or distributed when the state
-    * holds no copy. */
+    * verbatim. A driver copy grows on the driver, dense handoff
+    * included (the union's CSR is built from the copy and the novel
+    * edges and re-iterated there), and is kept while the union has at
+    * most the `localThreshold` the state was built under: the folded
+    * state is then held, its relations built from the grown copy when
+    * read. Past the bound the fold emits the grown copy's relations and
+    * drops it. A state without a copy folds distributed: a staged delta
+    * per side, or the distributed build over the union. */
   def pageRankDirectedRefreshState(st: PageRankDirectedState,
                                    newEdges: DataFrame,
                                    srcCol: String, dstCol: String)
       : PageRankDirectedState = {
-    val spark = st.ranks.sparkSession
-    refreshDirectedCore(st, newEdges, srcCol, dstCol) match {
-      case Left(novel) =>
+    val spark = newEdges.sparkSession
+    (refreshDirectedCore(st, newEdges, srcCol, dstCol), st.local) match {
+      case (Left(novel), Some(g)) =>
+        val union = g.plus(novel)
+        iterateLocal(union, st.scale)
+        localDirectedState(spark, union, st.scale)
+      case (Left(novel), None) =>
         pageRankDirectedState(st.edgesBySrc.union(edgeRelation(spark, novel)),
-          "s", "d", st.iterations, st.scale, st.local.fold(0L)(_.bound))
-      case Right(c) =>
+          "s", "d", st.iterations, st.scale, localThreshold = 0)
+      case (Right(c), Some(g)) =>
+        localDirectedState(spark, g.grow(c.novel, c.recRows), st.scale)
+      case (Right(c), None) =>
         // GROWING-UNION edge state: each sorted layout plus one tiny
         // staged delta per fold (probes prune the base; deltas are
         // batch-sized scans). A full re-sort per fold re-shuffled the
@@ -1705,31 +1801,23 @@ object Graph {
         // ball rows change in place, which an immutable staged layout
         // can only express as a rewrite.
         val delta = stage(edgeRelation(spark, c.novel))
-        val folded = st.local match {
-          case Some(g) =>
-            val grown = g.grow(c.novel, c.recRows)
-            st.copy(ranks = localRanks(spark, grown),
-              local = Some(grown).filter(g => g.edgeCount <= g.bound))
-          case None =>
-            val recs = c.recs(spark)
-            val ball = c.ball(spark)
-            var ballRows = recs.last.select(col("node"), col("degree"))
-            for (i <- 1 to st.iterations)
-              ballRows = ballRows.join(
-                recs(i - 1).select(col("node"), col("r").as(s"__r$i")),
-                Seq("node"), "left")
-            val ballStored = st.ranks.select(col("node"), col("rs").as("__olds"))
-              .join(broadcast(ball), Seq("node"))
-            val ballRanks = ballRows
-              .join(ballStored, Seq("node"), "left")
-              .select(col("node"), col("degree"),
-                array((1 to st.iterations).map(i =>
-                  coalesce(col(s"__r$i"), element_at(col("__olds"), i))): _*).as("rs"))
-            val untouched = st.ranks.join(broadcast(ball), Seq("node"), "left_anti")
-            st.copy(ranks = stageSorted(untouched.unionByName(ballRanks), "node"))
-        }
-        folded.copy(edgesBySrc = st.edgesBySrc.union(delta),
-          edgesByDst = st.edgesByDst.union(delta))
+        val recs = c.recs(spark)
+        val ball = c.ball(spark)
+        var ballRows = recs.last.select(col("node"), col("degree"))
+        for (i <- 1 to st.iterations)
+          ballRows = ballRows.join(
+            recs(i - 1).select(col("node"), col("r").as(s"__r$i")),
+            Seq("node"), "left")
+        val ballStored = st.ranks.select(col("node"), col("rs").as("__olds"))
+          .join(broadcast(ball), Seq("node"))
+        val ballRanks = ballRows
+          .join(ballStored, Seq("node"), "left")
+          .select(col("node"), col("degree"),
+            array((1 to st.iterations).map(i =>
+              coalesce(col(s"__r$i"), element_at(col("__olds"), i))): _*).as("rs"))
+        val untouched = st.ranks.join(broadcast(ball), Seq("node"), "left_anti")
+        PageRankDirectedState(st.edgesBySrc.union(delta), st.edgesByDst.union(delta),
+          stageSorted(untouched.unionByName(ballRanks), "node"), st.iterations, st.scale)
     }
   }
 

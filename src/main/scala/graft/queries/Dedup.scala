@@ -1132,7 +1132,9 @@ object Dedup {
     // Graph.pageRankRefresh. A ball-sized batch re-iterates only its
     // 3-hop ball against frozen iterates; at sf0.1 this batch touches
     // most of the graph, so the refresh hands off to the full recompute
-    // over the union (RefreshDenseFraction). Either way the ranks are EXACT, so
+    // over the union (RefreshDenseFraction), which it reads from the
+    // driver copy plus the novel pairs: the state's relations are never
+    // built or staged. Either way the ranks are EXACT, so
     // the oracle is the same full 3-iteration unrolled CTE over all pairs.
     Q("x_pagerank_incremental", (s, d) => {
       val pairs = stage(graft.operators.TextDedup

@@ -4,7 +4,7 @@ import scala.collection.mutable.ListBuffer
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryManager, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Kafka connection options — parity mirror of the reference's
@@ -360,6 +360,7 @@ final class Stream private (
       .trigger(defaultTrigger))
 
   private def start(w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): StreamingQuery = {
+    listener.attach(spark.streams)
     val q = w.start()
     queries += q
     listener.watch(q.id) // only this stream's queries feed its counters
@@ -367,8 +368,14 @@ final class Stream private (
   }
 
   /** Stop every query this stream started (reference `stop`,
-    * `src/stream.ts:267-270`). */
-  def stop(): Unit = { queries.foreach(_.stop()); queries.clear() }
+    * `src/stream.ts:267-270`) and take the counters off the listener bus
+    * once their last progress has landed; [[flushStatistics]] still
+    * returns it. */
+  def stop(): Unit = {
+    queries.foreach(_.stop())
+    queries.clear()
+    listener.detach(Stream.DetachTimeoutMs)
+  }
 
   /** Merge-and-reset counters (reference `flushStatistics`,
     * `src/stream.ts:256-260`). */
@@ -474,23 +481,44 @@ object Stream {
   }
 
   private def mk(spark: SparkSession, df: DataFrame,
-                 trigger: Trigger = Trigger.ProcessingTime(0L)): Stream = {
-    val listener = new StatsListener
-    spark.streams.addListener(listener)
-    new Stream(df, spark, ListBuffer.empty, listener, trigger)
-  }
+                 trigger: Trigger = Trigger.ProcessingTime(0L)): Stream =
+    new Stream(df, spark, ListBuffer.empty, new StatsListener, trigger)
+
+  /** How long [[Stream.stop]] waits for its queries' termination events
+    * to reach the counters before it takes them off the bus anyway. */
+  private val DetachTimeoutMs = 10000L
 
   /** Progress counters via the listener bus — the Spark-native home of the
     * reference's recv/send totals (`StreamingQueryProgress.numInputRows` /
-    * sink rows replace the hand-rolled counters in `src/context.ts:39-52`). */
+    * sink rows replace the hand-rolled counters in `src/context.ts:39-52`).
+    * One per stream family (a stream and everything derived from it,
+    * unions included): on the bus from the family's first `start` to its
+    * `stop`. */
   final class StatsListener extends StreamingQueryListener {
     private var recv = 0L
     private var sent = 0L
     private var lastTs = 0L
     private var dropped = 0L
     private val watched = scala.collection.mutable.Set.empty[java.util.UUID]
+    private val terminated = scala.collection.mutable.Set.empty[java.util.UUID]
+    private var bus: Option[StreamingQueryManager] = None
     private[streaming] def watch(id: java.util.UUID): Unit =
       synchronized { watched += id; () }
+    private[streaming] def attach(streams: StreamingQueryManager): Unit = synchronized {
+      if (bus.isEmpty) { streams.addListener(this); bus = Some(streams) }
+    }
+    /** Leave the bus once every watched query's termination event has
+      * arrived — the bus delivers in order, so every progress event
+      * before it has been counted — or after `timeoutMs`. */
+    private[streaming] def detach(timeoutMs: Long): Unit = synchronized {
+      val deadline = System.currentTimeMillis() + timeoutMs
+      while (!watched.subsetOf(terminated) && System.currentTimeMillis() < deadline)
+        wait(math.max(1L, deadline - System.currentTimeMillis()))
+      bus.foreach(_.removeListener(this))
+      bus = None
+      watched.clear()
+      terminated.clear()
+    }
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
       synchronized {
@@ -505,7 +533,8 @@ object Stream {
         // reference's late-batch warning (src/stream.ts:157-177).
         e.progress.stateOperators.foreach(so => dropped += so.numRowsDroppedByWatermark)
       }
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      synchronized { terminated += e.id; notifyAll() }
     def flush(): Statistics = synchronized {
       val s = Statistics(recv, sent, lastTs, dropped)
       recv = 0L; sent = 0L; lastTs = 0L; dropped = 0L

@@ -743,6 +743,9 @@ class GraphSpec extends SparkSpec {
     assert(rows(st2) == rows(st))
   }
 
+  private def edgeRows(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("s"), col("d")).as[(Long, Long)].collect().sorted.toSeq
+
   private def directedRows(s: Graph.PageRankDirectedState) =
     s.ranks.select(col("node"), col("degree"),
       expr("array_join(transform(rs, x -> CAST(x AS STRING)), ',')"))
@@ -786,6 +789,12 @@ class GraphSpec extends SparkSpec {
         assert(foldedLocal.local.nonEmpty && foldedDist.local.isEmpty)
         assert(directedRows(foldedLocal) == directedRows(foldedDist),
           s"trial $trial $name: fold diverged")
+        // the driver side's edge relations come from the grown copy, the
+        // distributed side's from its staged layouts and deltas.
+        for ((side, rel) <- Seq[(String, Graph.PageRankDirectedState => org.apache.spark.sql.DataFrame)](
+            "edgesBySrc" -> (_.edgesBySrc), "edgesByDst" -> (_.edgesByDst)))
+          assert(edgeRows(rel(foldedLocal)) == edgeRows(rel(foldedDist)),
+            s"trial $trial $name: $side diverged")
         local = foldedLocal
         dist = foldedDist
       }
@@ -814,17 +823,20 @@ class GraphSpec extends SparkSpec {
   test("x_linkgraph_rank_incremental: the driver-held state pins its Spark jobs") {
     val docs = graft.sources.Tables.documents(spark, sf("sf0.001"))
     // build + collect of the registry query. The distributed state build
-    // and its probing refresh started 38 jobs on this spec.
+    // and its probing refresh started 38 jobs on this spec, and a
+    // driver-held state that staged its relations and spliced through
+    // them 11.
     val (out, jobs) = jobsDuring(
       SparkEntry.queries("x_linkgraph_rank_incremental")(spark, sf("sf0.001")).collect())
     assert(out.length == docs.count())
-    assert(jobs == 11, s"build + collect started $jobs Spark jobs")
-    // a refresh of a driver-held state starts no job beyond its batch
-    // collect (one scan, no shuffle); in localCheckpoint mode neither
-    // does a fold.
-    val st = Graph.pageRankDirectedState(
-      docs.select(col("doc_id").as("s"), expr("(doc_id * 3 + 1) % 512").as("d")), "s", "d")
+    assert(jobs == 8, s"build + collect started $jobs Spark jobs")
+    // a build under the bound starts only its edge collect; a refresh of
+    // a driver-held state starts no job beyond its batch collect (one
+    // scan, no shuffle); neither does a fold.
+    val (st, buildJobs) = jobsDuring(Graph.pageRankDirectedState(
+      docs.select(col("doc_id").as("s"), expr("(doc_id * 3 + 1) % 512").as("d")), "s", "d"))
     assert(st.local.nonEmpty)
+    assert(buildJobs == 1, s"build started $buildJobs jobs")
     val batch = docs.filter(col("doc_id") % 29 === 0)
       .select(col("doc_id").as("s"), expr("(doc_id * 5 + 2) % 512").as("d"))
     val (_, refreshJobs) = jobsDuring(
@@ -845,6 +857,35 @@ class GraphSpec extends SparkSpec {
     assert(undRefreshJobs == 1, s"undirected refresh started $undRefreshJobs jobs")
     val (_, undFoldJobs) = jobsDuring(Graph.pageRankRefreshState(und, batch, "s", "d"))
     assert(undFoldJobs == 1, s"undirected fold started $undFoldJobs jobs")
+  }
+
+  test("a driver-held state stages nothing until a relation is read") {
+    // a 200-node ring with chords: a one-edge batch's ball stays small.
+    val rnd = new scala.util.Random(41)
+    val ring = (0L until 200L).map(i => (i, (i + 1) % 200)) ++
+      Seq.fill(30)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+    val batch = Seq((3L, 150L)).toDF("s", "d")
+    val vertices = (0L until 210L).toDF("doc_id")
+    val dir = java.nio.file.Files.createTempDirectory("graft-prheld").toFile
+    def stageDirs() = dir.listFiles().count(_.getName.startsWith("stage_"))
+    spark.conf.set("graft.stage.dir", dir.toString)
+    try {
+      val st = Graph.pageRankDirectedState(ring.toDF("s", "d"), "s", "d")
+      assert(st.local.nonEmpty)
+      val out = Graph.pageRankDirectedRefresh(vertices, "doc_id", st, batch, "s", "d")
+        .as[(Long, Long)].collect()
+      assert(out.length == 210)
+      val folded = Graph.pageRankDirectedRefreshState(st.copy(), batch, "s", "d")
+      assert(folded.local.nonEmpty)
+      assert(stageDirs() == 0, "an unread driver-held state staged a relation")
+      // the first read stages that relation, and only that one.
+      val nodes = folded.ranks.count()
+      assert(nodes == folded.local.get.nodes.length)
+      assert(stageDirs() == 1)
+    } finally {
+      spark.conf.unset("graft.stage.dir")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
   }
 
   test("pageRankRefresh: empty batch returns stored ranks; no broadcast HINT on the corpus attach") {

@@ -231,6 +231,26 @@ class StreamFacadeSpec extends SparkSpec {
     q.stop()
   }
 
+  test("a stream family holds one listener from its first start until stop()") {
+    import spark.implicits._
+    val before = spark.streams.listListeners().length
+    val a = MemoryStream[KMsg]
+    val b = MemoryStream[KMsg]
+    val schema = StructType(Seq(StructField("v", IntegerType)))
+    val s = kafkaShaped(a, schema).union(kafkaShaped(b, schema))
+    assert(spark.streams.listListeners().length == before)
+    val q = s.toMemory("listener_t")
+    assert(spark.streams.listListeners().length == before + 1)
+    a.addData(msg("""{"v":1}""", 1000L, 0), msg("""{"v":2}""", 2000L, 1))
+    b.addData(msg("""{"v":3}""", 3000L, 0))
+    q.processAllAvailable()
+    s.stop()
+    assert(!q.isActive)
+    assert(spark.streams.listListeners().length == before)
+    // stop() leaves the bus only after the last progress was counted.
+    assert(s.flushStatistics().recvTotal == 3)
+  }
+
   test("createStream maps every context option to its Kafka source option") {
     // The exact map createStream applies (reference src/context.ts:96-129),
     // spec-checked directly — the spark-sql-kafka connector is not in this
