@@ -1295,12 +1295,12 @@ object Graph {
   }
 
   object PageRankDirectedState {
-    /** A strict state over relations already built. */
+    /** A strict state, without a driver copy, over relations already
+      * built. */
     def apply(edgesBySrc: DataFrame, edgesByDst: DataFrame, ranks: DataFrame,
-              iterations: Int, scale: Long,
-              local: Option[DirectedLocal] = None): PageRankDirectedState =
+              iterations: Int, scale: Long): PageRankDirectedState =
       new PageRankDirectedState(() => edgesBySrc, () => edgesByDst, () => ranks,
-        iterations, scale, local)
+        iterations, scale, None)
 
     /** A state holding the driver copy `g`, whose relations are built
       * from `g` when first read. */

@@ -149,10 +149,10 @@ object GraphIngest {
       version, foldedBatch)
 
   /** Evolving PageRank state: the symmetric [[Graph.PageRankDirectedState]]
-    * of [[Graph.pageRankState]] (already staged by its builders; a graph
-    * under [[Graph.DefaultLocalThreshold]] symmetrized rows also keeps
-    * its driver copy, so a fold starts no probe job) plus the fold
-    * version. */
+    * of [[Graph.pageRankState]] (staged by its builders; a graph under
+    * [[Graph.DefaultLocalThreshold]] symmetrized rows keeps its driver
+    * copy instead, so a fold starts no probe job and stages only the
+    * history `onBatch` reads) plus the fold version. */
   final case class RankState(pr: Graph.PageRankDirectedState, version: Long,
                              foldedBatch: Long = -1L)
     extends Gate.Folded
