@@ -1734,9 +1734,15 @@ object Graph {
     refreshDirectedCore(st, newEdges, srcCol, dstCol) match {
       case Left(novel) =>
         val union = st.local match {
+          // parallelized, not a local relation: the optimizer would
+          // evaluate the recompute's projection and filter over a
+          // graph-sized local relation on the driver.
           case Some(g) =>
             val (src, dst) = g.edgesPlus(novel)
-            edgeRelation(spark, src.indices.map(i => (src(i), dst(i))))
+            spark.createDataset(spark.sparkContext.parallelize(
+              src.indices.map(i => (src(i), dst(i))),
+              spark.sessionState.conf.numShufflePartitions))(
+              org.apache.spark.sql.Encoders.product[(Long, Long)]).toDF("s", "d")
           case None => st.edgesBySrc.union(edgeRelation(spark, novel))
         }
         pageRankDirected(vertices, idCol, union, "s", "d", st.iterations, st.scale)
