@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Ann
@@ -24,15 +24,8 @@ import graft.sources.Tables._
   */
 object AnnRecall {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sort-based shuffle writer everywhere — see Bench for the rationale.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Session.local(Session.cpus)
+    val d = Session.sfDir
     graft.functions.GraftFunctions.ensureRegistered(spark)
 
     val e = embeddings(spark, d).select(col("vec_id").as("id"), col("embedding"))

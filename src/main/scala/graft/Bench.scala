@@ -1,19 +1,32 @@
 package graft
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One Kafka-source-shaped record for the gate bench's MemoryStream. */
 case class BenchMsg(topic: String, partition: Int, offset: Long,
                     timestamp: java.sql.Timestamp,
                     key: Array[Byte], value: Array[Byte])
 
-/** Benchmark main — times each headline query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line for the driver's BENCH_r{N}.json.
+/** graft's measurement harness, on `SPARK_GRAFT_SF_DIR` at
+  * `SPARK_GRAFT_CPUS` cores ([[Session]]). Three modes:
+  *
+  *   runMain graft.Bench                          the headline sweep: ONE JSON line
+  *   runMain graft.Bench probe <key>…             one key in isolation, with its executions
+  *   runMain graft.Bench plan <dir> <tag> <key>…  formatted plans to `<dir>/<key>_<tag>.txt`
   *
   * Results are materialized through the `noop` sink, NOT `.count()`:
   * count() lets Catalyst prune every projection (a scan-only plan), which
   * would benchmark nothing. noop executes the full plan and discards rows.
   */
 object Bench {
+
+  /** The streaming gate's key: a Bench-only key, not a registry query. */
+  val GateKey = "x_gate_dedup_stream"
 
   /** Fixed CPU-bound calibration probe: xorshift-fill then sort 10M longs
     * on ONE thread — no Spark, no IO, nothing allocated in the timed
@@ -49,7 +62,8 @@ object Bench {
     * each repetition streams the same 3 micro-batches — the held-out
     * tenth of the corpus re-ingested twice, once as byte-exact copies
     * under shifted ids (the bloom+settle path) and once with a perturbed
-    * tail (the LSH path) — through a fresh MemoryStream-backed query.
+    * tail (the LSH path) — through a fresh MemoryStream-backed query,
+    * stopped through its `Stream` so its listener leaves the bus.
     * Returns (wall seconds per repetition list, corpus-state build
     * seconds). */
   def gateBench(spark: SparkSession, sfDir: String,
@@ -88,17 +102,19 @@ object Bench {
       val q = DedupIngest.startGated(s, state, "value.doc_id", "value.text") {
         (exact, near, _, _) => sink += exact.count() + near.count()
       }
-      val t0 = System.nanoTime()
-      (0 until 3).foreach { b =>
-        val batch = payloads.filter(_._1 % 3 == b).zipWithIndex.map {
-          case ((_, j), i) => BenchMsg("bench", 0, i.toLong,
-            new java.sql.Timestamp(1000L + i), null, j.getBytes("UTF-8"))
-        }
-        ms.addData(batch.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      q.stop()
+      val t =
+        try {
+          val t0 = System.nanoTime()
+          (0 until 3).foreach { b =>
+            val batch = payloads.filter(_._1 % 3 == b).zipWithIndex.map {
+              case ((_, j), i) => BenchMsg("bench", 0, i.toLong,
+                new java.sql.Timestamp(1000L + i), null, j.getBytes("UTF-8"))
+            }
+            ms.addData(batch.toIndexedSeq: _*)
+            q.processAllAvailable()
+          }
+          (System.nanoTime() - t0) / 1e9
+        } finally s.stop()
       require(sink > 0L, "gate bench produced no pairs — workload broken")
       t
     }
@@ -106,60 +122,148 @@ object Bench {
     ((1 to reps).map(_ => rep()), buildSec)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS) — see Tables.events (loader
-      // is pure; entry points own this conf).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // point-set probes on range-sorted state (Graph.stageSorted) need
-      // the In filter pushed as points, not a min/max range — scattered
-      // ball ids make the range fallback prune nothing.
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "256")
-      // Use the SORT-BASED shuffle writer even at small reducer counts
-      // (r18, guide §2.2/§6 small-files): below the 200-partition default
-      // threshold Spark's bypass-merge writer creates R+2 files PER MAP
-      // TASK (32×34 ≈ 1100 file creates for a kilobyte-scale shuffle) —
-      // ProbeMetrics attributed 1.5-1.9 s of cumulative shuffleWriteTime
-      // to single tiny exchanges, the dominant fixed cost of every staged
-      // materialization at sf0.1 (A/B: x_line_dedup −42%, classifier
-      // −25%, no key regressed). NOT a local-only tune: production
-      // reducer counts sit far above 200, where the bypass writer never
-      // runs — this pins the local code path to the one a 100 TB cluster
-      // executes anyway. Scale-independent constant, honored at any
-      // SPARK_GRAFT_CPUS.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Best-of-3 reruns re-execute localCheckpoint-staged relations whose
-    // first-run accumulators are gone, making DAGScheduler log harmless
-    // "non-existent accumulator" ERRORs around the metric line. Silence
-    // that one logger so the JSON line is the only bench output.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.DAGScheduler",
-      org.apache.logging.log4j.Level.OFF)
-    def run(name: String): Double = {
-      // Honesty fence (r17): any relation a query fn might leave in the
-      // CacheManager would be plan-matched and silently reused by the
-      // next run of the same query — every timed run must compute from
-      // the parquet inputs. No current query persists (staging is
-      // localCheckpoint-based, which never cross-run-matches), so this
-      // is a no-op today; it pins the methodology.
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+  /** One timed run of registry `key` through the noop sink, in wall
+    * seconds, behind the cache fence (r17): any relation a query fn might
+    * leave in the CacheManager would be plan-matched and silently reused
+    * by the next run of the same query — every timed run must compute
+    * from the parquet inputs. No current query persists (staging is
+    * localCheckpoint-based, which never cross-run-matches), so the fence
+    * is a no-op today; it pins the methodology. */
+  private def timedRun(spark: SparkSession, sfDir: String, key: String): Double = {
+    spark.sharedState.cacheManager.clearCache()
+    val t0 = System.nanoTime()
+    SparkEntry.queries(key)(spark, sfDir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Runs `body` between two sentinel jobs and returns once the listener
+    * bus has delivered the closing one. `open` turns true when the bus
+    * delivers the opening sentinel's start and false at the closing
+    * one's; the bus's shared queue delivers in order, so a listener on
+    * that queue (a `QueryExecutionListener`, or `onJob`) sees `open` true
+    * for exactly the events `body` posted, on any thread. `onJob` gets
+    * each job start `body` posted. */
+  def busWindow[A](spark: SparkSession, open: AtomicBoolean = new AtomicBoolean(false),
+                   onJob: SparkListenerJobStart => Unit = _ => ())(body: => A): A = {
+    val tag = s"graft-window-${java.util.UUID.randomUUID()}"
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.job.description")) match {
+          case Some(d) if d == s"$tag-open" => open.set(true)
+          case Some(d) if d == s"$tag-close" => open.set(false); closed.countDown()
+          case _ => if (open.get()) onJob(js)
+        }
+    }
+    val sc = spark.sparkContext
+    def sentinel(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel(s"$tag-open")
+      val out = body
+      sentinel(s"$tag-close")
+      if (!closed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        throw new IllegalStateException("listener bus stalled")
+      out
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** One probe's timed runs and the executions of its last timed run
+    * (function name, execution, nanos). */
+  final case class Probe(runs: Seq[Double], executions: Seq[(String, QueryExecution, Long)])
+
+  /** One key in isolation: 2 untimed warm-ups, then 5 timed runs, the
+    * last of them with its executions captured — a query fn may start
+    * several (staging materializations, driver settles, iteration
+    * rounds) besides the final write. [[GateKey]] goes through the same
+    * [[gateBench]] the sweep times (state build untimed, one extra warm-up
+    * pass) and captures no executions. */
+  def probe(spark: SparkSession, sfDir: String, key: String): Probe =
+    if (key == GateKey) {
+      val (_, build) = gateBench(spark, sfDir, reps = 1)
+      System.err.println(f"[probe] gate state build: $build%.3f s (warm-up pass)")
+      Probe(gateBench(spark, sfDir, reps = 5)._1, Nil)
+    } else {
+      val caught = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution, Long)]()
+      val open = new AtomicBoolean(false)
+      val listener = new QueryExecutionListener {
+        override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+          if (open.get()) caught.add((fn, qe, ns))
+        override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        timedRun(spark, sfDir, key); timedRun(spark, sfDir, key)
+        val runs = (1 to 4).map(_ => timedRun(spark, sfDir, key)) :+
+          busWindow(spark, open)(timedRun(spark, sfDir, key))
+        import scala.jdk.CollectionConverters._
+        Probe(runs, caught.asScala.toSeq)
+      } finally spark.listenerManager.unregister(listener)
+    }
+
+  /** Writes `key`'s formatted plan to `<dir>/<key>_<tag>.txt` and returns
+    * the path. The plan is the one the sweep runs, modulo AQE's runtime
+    * re-optimization, which explain-before-execution cannot show. */
+  def plan(spark: SparkSession, sfDir: String, dir: String, tag: String, key: String): String = {
+    new java.io.File(dir).mkdirs()
+    val text = SparkEntry.queries(key)(spark, sfDir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val path = s"$dir/${key}_$tag.txt"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text)
+    path
+  }
+
+  /** An executed plan as an indented operator tree, each node with its
+    * non-zero SQLMetrics (codegen duration, exchange size and write time,
+    * build times, scan rows). */
+  private def metricsTree(p: SparkPlan, depth: Int = 0, sb: StringBuilder = new StringBuilder): String = {
+    val ms = p.metrics.toSeq
+      .filter { case (_, m) => m.value > 0 }
+      .sortBy(_._1)
+      .map { case (k, m) => s"$k=${m.value}" }.mkString(", ")
+    sb.append("  " * depth + p.nodeName + (if (ms.nonEmpty) s"  [$ms]" else "") + "\n")
+    p match {
+      case a: AdaptiveSparkPlanExec => metricsTree(a.executedPlan, depth + 1, sb)
+      case q: QueryStageExec => metricsTree(q.plan, depth + 1, sb)
+      case _ => p.children.foreach(metricsTree(_, depth + 1, sb))
+    }
+    sb.toString
+  }
+
+  private def printProbe(spark: SparkSession, sfDir: String, key: String): Unit = {
+    // THE calibration probe before and after, so the isolated reading
+    // normalizes the same way as the sweep's.
+    val calibBefore = calibrate()._1
+    val p = probe(spark, sfDir, key)
+    val calibAfter = calibrate()._1
+    val calib = math.min(calibBefore, calibAfter)
+    println(f"[probe] $key sf=$sfDir")
+    println(f"[probe] runs: ${p.runs.map(t => f"$t%.3f").mkString(", ")}")
+    println(f"[probe] best: ${p.runs.min}%.3f s  calib: $calib%.3f s " +
+      f"(before $calibBefore%.3f / after $calibAfter%.3f)")
+    println(f"[probe] normalized best: ${p.runs.min / calib}%.3f")
+    if (key != GateKey) {
+      println(f"[metrics] $key wall=${p.runs.last}%.3f s, executions=${p.executions.size}")
+      p.executions.zipWithIndex.foreach { case ((f, qe, ns), i) =>
+        println(f"--- [$key] execution $i ($f, ${ns / 1e9}%.3f s) ---")
+        println(metricsTree(qe.executedPlan))
+      }
+    }
+  }
+
+  /** The headline sweep: every headliner plus the streaming gate, best of
+    * 3 interleaved timed sweeps after 2 untimed ones; returns the JSON
+    * line. */
+  private def sweep(spark: SparkSession, sfDir: String, cpus: Int): String = {
+    def run(name: String): Double =
+      try timedRun(spark, sfDir, name)
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
+        -1.0
       }
-      (System.nanoTime() - t0) / 1e9
-    }
     val names = SparkEntry.headlines.map(_.name)
     // calibration sample 1: machine state at sweep start (see calibrate).
     val calibBefore = calibrate()
@@ -194,8 +298,8 @@ object Bench {
         System.err.println(s"[bench] gate failed: ${e.getMessage}")
         (Seq(-1.0), -1.0)
       }
-    runs("x_gate_dedup_stream") = gateRuns.toVector
-    val allNames = names :+ "x_gate_dedup_stream"
+    runs(GateKey) = gateRuns.toVector
+    val allNames = names :+ GateKey
     val results = allNames.map { n =>
       val ts = runs(n)
       n -> (if (ts.contains(-1.0)) -1.0 else ts.min)
@@ -220,9 +324,6 @@ object Bench {
     val qn = results.map { case (k, v) =>
       "\"" + k + "\":" + (if (v < 0 || calib <= 0) -1.0 else v / calib)
     }.mkString("{", ",", "}")
-    // Stop Spark FIRST so no executor/shutdown logging can interleave after
-    // the metric line — the driver wants it as the final clean stdout line.
-    spark.stop()
     // Field order is deliberate: the driver's BENCH wrapper keeps only the
     // TAIL of the line (r14/r15 both lost the LEAD keys; the cut landed
     // mid-`runs`, and fields after `runs` — calib, sf — survived). So the
@@ -231,6 +332,29 @@ object Bench {
     // kept tail preserves it. `best` duplicates `queries` so a cut landing
     // mid-`queries` still leaves `best` intact for bench_diff.
     val failedJs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"total","runs":$rs,"calib_runs":$cruns,"queries_normalized":$qn,"queries":$qs,"best":$qs,"gate_build":$gateBuild,"calib":$calib,"failed":$failedJs,"cpus":$cpus,"value":$total,"unit":"sec","sf":"$sfDir"}""")
+    s"""{"metric":"total","runs":$rs,"calib_runs":$cruns,"queries_normalized":$qn,"queries":$qs,"best":$qs,"gate_build":$gateBuild,"calib":$calib,"failed":$failedJs,"cpus":$cpus,"value":$total,"unit":"sec","sf":"$sfDir"}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Session.sfDir
+    val cpus = Session.cpus
+    val mode: SparkSession => Unit = args.toList match {
+      case Nil => spark =>
+        val line = sweep(spark, sfDir, cpus)
+        // Stop Spark FIRST so no executor/shutdown logging can interleave
+        // after the metric line — the driver wants it as the final clean
+        // stdout line.
+        spark.stop()
+        println(line)
+      case "probe" :: keys if keys.nonEmpty => spark =>
+        keys.foreach(printProbe(spark, sfDir, _))
+        spark.stop()
+      case "plan" :: dir :: tag :: keys if keys.nonEmpty => spark =>
+        keys.foreach(k => System.err.println(s"[plan] wrote ${plan(spark, sfDir, dir, tag, k)}"))
+        spark.stop()
+      case _ => throw new IllegalArgumentException(
+        "usage: Bench | Bench probe <key>… | Bench plan <dir> <tag> <key>…")
+    }
+    mode(Session.local(cpus))
   }
 }

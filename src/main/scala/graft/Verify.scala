@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS) — see Tables.events (loader
-      // is pure; entry points own this conf).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // point-set probes on range-sorted state (Graph.stageSorted) need
-      // the In filter pushed as points, not a min/max range — scattered
-      // ball ids make the range fallback prune nothing.
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "256")
-      // sort-based shuffle writer everywhere — see Bench for the rationale.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Re-executed localCheckpoint relations log harmless "non-existent
-    // accumulator" ERRORs (same root cause as in Bench) — silence them.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.DAGScheduler",
-      org.apache.logging.log4j.Level.OFF)
+    val spark = Session.local(Session.cpus)
     new java.io.File(outDir).mkdirs()
     val attempted = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

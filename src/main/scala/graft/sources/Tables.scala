@@ -31,9 +31,9 @@ object Tables {
     * testdata generation:
     *  - parquet TIMESTAMP(NANOS), which Spark 4 rejects
     *    ([PARQUET_TYPE_ILLEGAL]) unless read as long
-    *    (`spark.sql.legacy.parquet.nanosAsLong=true`, set in every entry
-    *    point: Verify / Bench / ExplainAudit / Scratch / StreamDemo / the
-    *    test base) — then converted with integer division (`div`, not
+    *    (`spark.sql.legacy.parquet.nanosAsLong=true`, set by
+    *    [[graft.Session]], which every entry point builds its session
+    *    with) — then converted with integer division (`div`, not
     *    `/`: epoch-nanos ~1.7e18 exceeds double's 2^53 integer range);
     *  - parquet TIMESTAMP(MICROS) without timezone, which Spark surfaces
     *    as TIMESTAMP_NTZ — cast to the session-zoned TimestampType (all
